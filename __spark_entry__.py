@@ -24,12 +24,13 @@ containing queries remain the primary evidence.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from flink_stream_processing_refarch_spark.operators import bpe as bpe_ops  # noqa: E402
 from flink_stream_processing_refarch_spark.operators import contamination as contam_ops  # noqa: E402

@@ -14,9 +14,10 @@ The reference's ParameterTool args map to local/cluster equivalents:
   RocksDB state backend               on by default (RocksDBStateStoreProvider)
   SHARD_GETRECORDS_* throttling       --max-files-per-trigger
 
-Runs Q1 + Q2 as two stateful streaming queries (windowed aggregation in
-the streaming plan — correct across micro-batches and restarts); the
-ES-style sink receives finalized windows only (SURVEY.md §4.1, §4.3).
+Runs Q1 + Q2 as one stateful streaming query (one windowed aggregation
+in the streaming plan feeds both document types — correct across
+micro-batches and restarts); the ES-style sink receives finalized windows
+only (SURVEY.md §4.1, §4.3).
 
 Usage:
   python -m flink_stream_processing_refarch_spark.pipeline \

@@ -14,9 +14,10 @@ Spark's emission rule.
 Architecture parity notes:
   - The shared ``trips`` sub-stream feeding both queries
     (ProcessTaxiStream.java:87,96,109 — a DAG fan-out Flink shares but two
-    Spark ``writeStream``s would recompute) is handled the idiomatic Spark
-    way: ONE query with ``foreachBatch`` computing both aggregates from a
-    cached micro-batch (``run_taxi_pipeline``).
+    Spark ``writeStream``s would recompute) is ONE stateful query whose
+    windowed aggregate carries both queries' per-cell counts and sums;
+    ``foreachBatch`` splits the finalized rows into the two document
+    streams (``run_taxi_pipeline``).
   - RocksDB state store (ProcessTaxiStream.java:145) maps to
     ``spark.sql.streaming.stateStore.providerClass`` = RocksDBStateStoreProvider.
   - Source throttling (SHARD_GETRECORDS_MAX, :76-77) maps to
@@ -34,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import geo
-from ..functions.timeutils import duration_min_sql
+from ..functions.timeutils import duration_min_sql, window_end_ms_sql
 from ..plans.taxi import MIN_PICKUP_COUNT
 from ..sources.trips import clean_trip_filter_sql, trip_exprs
 
@@ -245,21 +246,33 @@ def q1_agg_from_trips(
     )
 
 
+AIRPORTS = ("JFK", "LGA")  # classifier precedence order
+_LEG_COLS = [f"{a}_{m}" for a in AIRPORTS for m in ("cnt", "sum")]
+
+
+def with_airport_legs(trips: DataFrame) -> DataFrame:
+    """Trips + Q2's per-trip columns (ProcessTaxiStream.java:110-119):
+    ``airport_code`` is JFK (checked first), LGA or NULL by dropoff;
+    ``duration_min`` is the floored-minute trip duration."""
+    return trips.withColumns(
+        {
+            "airport_code": F.when(
+                geo.near_jfk("dropoff_lat", "dropoff_lon"), F.lit("JFK")
+            ).when(geo.near_lga("dropoff_lat", "dropoff_lon"), F.lit("LGA")),
+            "duration_min": F.expr(
+                duration_min_sql("dropoff_ms", "pickup_ms", "spark")
+            ),
+        }
+    )
+
+
 def q2_agg_from_trips(trips: DataFrame) -> DataFrame:
     """Q2 windowed aggregation: airport classification (JFK precedence),
     floored-minute durations, sum+avg per (geohash6, airport, window),
     HAVING count > 1 (ProcessTaxiStream.java:109-136)."""
-    trips = trips.withColumn(
-        "airport_code",
-        F.when(geo.near_jfk("dropoff_lat", "dropoff_lon"), F.lit("JFK")).when(
-            geo.near_lga("dropoff_lat", "dropoff_lon"), F.lit("LGA")
-        ),
-    ).filter(F.col("airport_code").isNotNull())
+    trips = with_airport_legs(trips).filter(F.col("airport_code").isNotNull())
     trips = geo.with_geohash(trips, "location", "pickup_lat", "pickup_lon", 6)
-    trips = trips.withColumn(
-        "duration_min", F.expr(duration_min_sql("dropoff_ms", "pickup_ms", "spark"))
-    )
-    return (
+    return _q2_rows(
         trips.groupBy(
             F.window("dropoff_ts", "10 minutes"), "location", "airport_code"
         )
@@ -267,17 +280,85 @@ def q2_agg_from_trips(trips: DataFrame) -> DataFrame:
             F.sum("duration_min").alias("sum_trip_duration"),
             F.count("*").alias("cnt"),
         )
-        .filter(F.col("cnt") > 1)
+        .withColumn("timestamp", F.unix_millis("window.end") - 1)
+    )
+
+
+def _q2_rows(groups: DataFrame) -> DataFrame:
+    """Q2 documents of (location, airport_code, sum_trip_duration, cnt,
+    timestamp) groups: HAVING count > 1, avg = sum / count (:123-134)."""
+    return groups.filter(F.col("cnt") > 1).select(
+        "location",
+        "airport_code",
+        "sum_trip_duration",
+        (F.col("sum_trip_duration").cast("double") / F.col("cnt")).alias(
+            "avg_trip_duration"
+        ),
+        "timestamp",
+    )
+
+
+def _cell_aggs() -> list:
+    """Per (geohash6, window) cell: the trip count (Q1) and, per airport
+    leg, its trip count and duration sum (Q2). Legs are disjoint (JFK
+    precedence): each Q2 (cell, airport) group is one leg of one cell."""
+    aggs = [F.count("*").alias("pickup_count")]
+    for a in AIRPORTS:
+        is_a = F.col("airport_code") == a
+        aggs += [
+            F.count_if(is_a).alias(f"{a}_cnt"),
+            F.sum(F.when(is_a, F.col("duration_min"))).alias(f"{a}_sum"),
+        ]
+    return aggs
+
+
+def taxi_agg_from_trips(trips: DataFrame) -> DataFrame:
+    """Q1 and Q2 as ONE windowed aggregation (:func:`_cell_aggs` per
+    10-min window and geohash6), as Flink fans one trip stream out to
+    both window aggregates (ProcessTaxiStream.java:87,96,109). Cells
+    that pass neither HAVING never leave the plan; :func:`q1_docs` and
+    :func:`q2_docs` split the rest into the two document streams."""
+    trips = with_airport_legs(
+        geo.with_geohash(trips, "location", "pickup_lat", "pickup_lon", 6)
+    )
+    keep = F.col("pickup_count") >= MIN_PICKUP_COUNT
+    for a in AIRPORTS:
+        keep = keep | (F.col(f"{a}_cnt") > 1)
+    return (
+        trips.groupBy(F.window("dropoff_ts", "10 minutes"), "location")
+        .agg(*_cell_aggs())
+        .filter(keep)
         .select(
             "location",
-            "airport_code",
-            "sum_trip_duration",
-            (F.col("sum_trip_duration").cast("double") / F.col("cnt")).alias(
-                "avg_trip_duration"
-            ),
+            "pickup_count",
+            *_LEG_COLS,
             (F.unix_millis("window.end") - 1).alias("timestamp"),
         )
     )
+
+
+def q1_docs(fused: DataFrame) -> DataFrame:
+    """Q1 documents of per-cell aggregates (:func:`_cell_aggs` plus
+    ``timestamp``): HAVING count >= 2 (ProcessTaxiStream.java:96-107)."""
+    return fused.filter(F.col("pickup_count") >= MIN_PICKUP_COUNT).select(
+        "location", "pickup_count", "timestamp"
+    )
+
+
+def q2_docs(fused: DataFrame) -> DataFrame:
+    """Q2 documents of per-cell aggregates, one per airport leg: each leg
+    is one (location, airport, window) group (ProcessTaxiStream.java:109-136)."""
+    legs = F.array(
+        *[
+            F.struct(
+                F.lit(a).alias("airport_code"),
+                F.col(f"{a}_sum").alias("sum_trip_duration"),
+                F.col(f"{a}_cnt").alias("cnt"),
+            )
+            for a in AIRPORTS
+        ]
+    )
+    return _q2_rows(fused.select("location", "timestamp", F.inline(legs)))
 
 
 def q1_from_wire(spark: SparkSession, json_dir: str, **source_opts) -> DataFrame:
@@ -426,16 +507,6 @@ def stream_clean_trips(spark: SparkSession, sf_dir: str, **source_opts) -> DataF
     )
 
 
-def q1_stream_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Q1: append-mode windowed count with HAVING."""
-    return q1_agg_from_trips(stream_clean_trips(spark, sf_dir))
-
-
-def q2_stream_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Q2: airport classification + windowed sum/avg duration."""
-    return q2_agg_from_trips(stream_clean_trips(spark, sf_dir))
-
-
 # State partition count for bounded local replays. A streaming query's
 # state partitioning is fixed by spark.sql.shuffle.partitions at first
 # start, and EVERY partition opens its own RocksDB instance per batch —
@@ -448,6 +519,16 @@ def q2_stream_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 STREAM_STATE_PARTITIONS = 4
 
 
+def _use_rocksdb_state(spark: SparkSession) -> None:
+    """The reference's RocksDB state backend (ProcessTaxiStream.java:145)
+    for queries started from here on; a restart keeps the provider its
+    checkpoint recorded."""
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    )
+
+
 def _run_to_memory(
     df: DataFrame, use_rocksdb: bool = True, output_mode: str = "append"
 ) -> DataFrame:
@@ -457,10 +538,7 @@ def _run_to_memory(
     (non-windowed) aggregations whose latest snapshot is the result."""
     spark = df.sparkSession
     if use_rocksdb:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
+        _use_rocksdb_state(spark)
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
         "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
@@ -470,8 +548,6 @@ def _run_to_memory(
     # offset/commit/state logs fsync per micro-batch; ~1s/query on ext4).
     # Durable jobs (run_taxi_pipeline, the CLI) pass their own
     # checkpointLocation on real storage.
-    import os
-
     ck_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
     ckpt = tempfile.mkdtemp(prefix="ckpt_", dir=ck_base)
     try:
@@ -499,11 +575,11 @@ def _run_to_memory(
 
 def q1_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded streaming replay of Q1 (availableNow -> memory sink)."""
-    return _run_to_memory(q1_stream_df(spark, sf_dir))
+    return _run_to_memory(q1_agg_from_trips(stream_clean_trips(spark, sf_dir)))
 
 
 def q2_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _run_to_memory(q2_stream_df(spark, sf_dir))
+    return _run_to_memory(q2_agg_from_trips(stream_clean_trips(spark, sf_dir)))
 
 
 def trending_counts_from_trips(trips: DataFrame) -> DataFrame:
@@ -1478,37 +1554,28 @@ def run_taxi_pipeline_single_pass(
     checkpoint_dir: str | None = None,
     max_files_per_trigger: int | str | None = "auto",
 ) -> dict[str, DataFrame]:
-    """Q1 + Q2 from ONE streaming pass over the trip source — the
-    single-scan answer to the dual-read trade documented on
-    :func:`run_taxi_pipeline` (Flink fans one DAG out to both aggregates,
-    ProcessTaxiStream.java:87,96,109; two Spark ``writeStream`` queries
-    re-scan the source).
-
-    Design: the streaming plan is STATELESS (no windowed agg in-plan);
-    ``foreachBatch`` computes per-batch PARTIAL aggregates for both
-    queries from one cached micro-batch and writes them epoch-addressed
-    (``.../epoch=N``, overwrite — recovery redelivery is idempotent).
-    Merge happens once at the end: partial counts/sums merge
-    associatively per (location[, airport], window), HAVING is applied
-    only post-merge, and the emission rule (window end <= final
-    watermark = max clean-trip event time, exactly q1/q2_streaming's)
-    filters on the max event time carried through the partials. This is
-    window-correct under ANY micro-batch split — the r01 caveat
-    (per-batch FINAL aggregation breaks windows spanning batches) does
-    not apply because nothing final happens per batch; see
+    """Q1 + Q2 from one streaming pass with NO in-plan state: the
+    partial-aggregate + compaction alternative to :func:`run_taxi_pipeline`.
+    ``foreachBatch`` writes the batch's per-cell PARTIAL aggregates
+    (:func:`_cell_aggs` per (location, window end), plus the max event
+    time) epoch-addressed (``.../cells/epoch=N``, overwrite — recovery
+    redelivery is idempotent). Merge happens once at the end: partial
+    counts/sums merge associatively per (location, window), both HAVINGs
+    apply only post-merge (:func:`q1_docs`, :func:`q2_docs`), and the
+    emission rule (window end <= final watermark = max clean-trip event
+    time, exactly q1/q2_streaming's) filters on the max event time
+    carried through the partials. This is window-correct under ANY
+    micro-batch split — the r01 caveat (per-batch FINAL aggregation
+    breaks windows spanning batches) does not apply because nothing final
+    happens per batch; see
     tests/test_streaming.py::test_single_pass_pipeline_multi_batch.
 
     Scale: per-batch partials are post-aggregate (O(active windows x
     cells), never raw trips), written distributed — the driver holds no
     rows; the compaction is one small batch job. The trade vs in-plan
     window state: partials storage instead of a state store, one merge
-    job instead of per-batch state lookups — the classic
-    partial-aggregate + compaction pipeline.
+    job instead of per-batch state lookups.
     """
-    import os
-
-    from ..functions.timeutils import window_end_ms_sql
-
     src_opts: dict[str, str] = {}
     if max_files_per_trigger == "auto":
         max_files_per_trigger = half_source_files(spark, sf_dir)
@@ -1520,57 +1587,20 @@ def run_taxi_pipeline_single_pass(
     ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_taxi_sp_", dir=base)
 
     def body(batch_df: DataFrame, epoch_id: int) -> None:
-        b = geo.with_geohash(
-            batch_df, "location", "pickup_lat", "pickup_lon", 6
-        ).withColumn("wend", F.expr(window_end_ms_sql("dropoff_ms")))
-        b = b.persist()
-        try:
-            # q1 partials double as the watermark carrier: these groups
-            # cover every clean trip in the batch, so max(dropoff_ms)
-            # over all q1 partials = the final watermark.
-            # Partial outputs are O(active windows x cells); they write
-            # at the aggregation's own partition width (a handful —
-            # STREAM_STATE_PARTITIONS during bounded replays) so the
-            # write is parallel. The former coalesce(1) serialized each
-            # epoch's partial write through ONE task — at the sf10
-            # composite (~1M partial rows/epoch) that single-threaded
-            # funnel was measurable (r08 finding); a few files per epoch
-            # still keeps the compaction scan shard count bounded.
-            (
-                b.groupBy("location", "wend")
-                .agg(
-                    F.count("*").alias("cnt"),
-                    F.max("dropoff_ms").alias("max_ms"),
-                )
-                .write.mode("overwrite")
-                .parquet(f"{pdir}/q1/epoch={int(epoch_id)}")
+        # The partials' groups cover every clean trip in the batch, so
+        # max(max_ms) over all of them is the final watermark. They write
+        # at the aggregation's own partition width (a handful during
+        # bounded replays): a coalesce(1) funnel was measurable at the
+        # sf10 composite (r08 finding).
+        (
+            with_airport_legs(
+                geo.with_geohash(batch_df, "location", "pickup_lat", "pickup_lon", 6)
             )
-            q2b = (
-                b.withColumn(
-                    "airport_code",
-                    F.when(
-                        geo.near_jfk("dropoff_lat", "dropoff_lon"), F.lit("JFK")
-                    ).when(
-                        geo.near_lga("dropoff_lat", "dropoff_lon"), F.lit("LGA")
-                    ),
-                )
-                .filter(F.col("airport_code").isNotNull())
-                .withColumn(
-                    "duration_min",
-                    F.expr(duration_min_sql("dropoff_ms", "pickup_ms", "spark")),
-                )
-            )
-            (
-                q2b.groupBy("location", "airport_code", "wend")
-                .agg(
-                    F.sum("duration_min").alias("sum_dur"),
-                    F.count("*").alias("cnt"),
-                )
-                .write.mode("overwrite")
-                .parquet(f"{pdir}/q2/epoch={int(epoch_id)}")
-            )
-        finally:
-            b.unpersist()
+            .groupBy("location", F.expr(window_end_ms_sql("dropoff_ms")).alias("wend"))
+            .agg(*_cell_aggs(), F.max("dropoff_ms").alias("max_ms"))
+            .write.mode("overwrite")
+            .parquet(f"{pdir}/cells/epoch={int(epoch_id)}")
+        )
 
     # Same bounded-replay sizing rationale as _run_to_memory: the
     # per-epoch aggregates are small, so session-wide shuffle widths
@@ -1589,40 +1619,18 @@ def run_taxi_pipeline_single_pass(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
-    q1p = spark.read.parquet(f"{pdir}/q1")
-    wm = q1p.agg(F.max("max_ms").alias("wm_ms"))
-    pickup = (
-        q1p.groupBy("location", "wend")
-        .agg(F.sum("cnt").alias("pickup_count"))
-        .filter(F.col("pickup_count") >= MIN_PICKUP_COUNT)
+    partials = spark.read.parquet(f"{pdir}/cells")
+    wm = partials.agg(F.max("max_ms").alias("wm_ms"))
+    cells = (
+        partials.groupBy("location", "wend")
+        .agg(*[F.sum(c).alias(c) for c in ("pickup_count", *_LEG_COLS)])
         .crossJoin(F.broadcast(wm))
         .filter(F.col("wend") - 1 < F.col("wm_ms"))
-        .select(
-            "location",
-            "pickup_count",
-            (F.col("wend") - 1).alias("timestamp"),
-        )
-    )
-    q2p = spark.read.parquet(f"{pdir}/q2")
-    duration = (
-        q2p.groupBy("location", "airport_code", "wend")
-        .agg(F.sum("sum_dur").alias("sum_trip_duration"), F.sum("cnt").alias("cnt"))
-        .filter(F.col("cnt") > 1)
-        .crossJoin(F.broadcast(wm))
-        .filter(F.col("wend") - 1 < F.col("wm_ms"))
-        .select(
-            "location",
-            "airport_code",
-            "sum_trip_duration",
-            (
-                F.col("sum_trip_duration").cast("double") / F.col("cnt")
-            ).alias("avg_trip_duration"),
-            (F.col("wend") - 1).alias("timestamp"),
-        )
+        .withColumn("timestamp", F.col("wend") - 1)
     )
     return {
-        "pickup_count": pickup,
-        "trip_duration": duration,
+        "pickup_count": q1_docs(cells),
+        "trip_duration": q2_docs(cells),
         "partials_dir": pdir,
         "checkpoint_dir": ckpt,
     }
@@ -1854,8 +1862,6 @@ def _emb_split_path(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
     """Stamp-keyed multi-file copy of the embeddings table — the local
     stand-in for a vector landing zone where shards arrive over time
     (the single-file testdata cannot exercise a multi-batch replay)."""
-    import os
-
     from ..schemas import load_table, scratch_dir, table_stamp
 
     key = (sf_dir, table_stamp(f"{sf_dir}/embeddings.parquet"), n_files)
@@ -2134,40 +2140,48 @@ def run_taxi_pipeline(
     stream_name: str = "taxi-trips",
 ) -> dict[str, "DataFrame | str"]:
     """The full consumer job (ProcessTaxiStream.main equivalent): Q1 + Q2
-    as TWO streaming queries over the same trip-stream definition, each
-    with its windowed aggregation INSIDE the streaming plan — the state
-    store carries windows across micro-batches and append mode emits each
-    window exactly once when the watermark closes it. ``foreachBatch`` is
-    sink fan-out ONLY: it receives finalized result deltas (tiny,
-    post-HAVING) and relays them to the ES bulk sink.
-
-    This is window-correct under ANY micro-batch split (multiple files,
-    ``max_files_per_trigger`` throttling, restarts from ``checkpoint_dir``);
-    the previous design aggregated per micro-batch inside foreachBatch and
-    was correct only for single-batch availableNow runs. Flink fans one
-    DAG out to both aggregates (ProcessTaxiStream.java:87,96,109); Spark's
-    equivalent of shared cross-batch agg state is one query per aggregate —
-    the second source scan is the idiomatic price of correct state
-    ownership, and at 100 TB the scan is the cheap part next to the agg.
+    from ONE stateful streaming query, as Flink fans one trip stream out
+    to both window aggregates (ProcessTaxiStream.java:87,96,109): one
+    source scan, one RocksDB state store and one offset/commit log per
+    micro-batch. The windowed aggregation (:func:`taxi_agg_from_trips`)
+    lives INSIDE the streaming plan, so windows carry across
+    micro-batches and append mode emits each window exactly once, when
+    the watermark closes it — correct under ANY micro-batch split
+    (``max_files_per_trigger`` throttling, restarts from
+    ``checkpoint_dir``). ``foreachBatch`` persists the small finalized
+    batch and writes its two document streams (:func:`q1_docs`,
+    :func:`q2_docs`): the stateful plan runs once per epoch.
 
     Emission semantics match q1_streaming/q2_streaming (and Flink's
     in-band watermark): windows closed by the final watermark = max event
     time emit; the trailing open window stays in state (and would emit on
-    the next run from the same checkpoint).
+    the next run from the same checkpoint). The query checkpoints under
+    ``{checkpoint_dir}/taxi``; a root holding the former two-query layout
+    raises ValueError instead of replaying from offset 0.
 
-    Result rows never pass through the driver: ``foreachBatch`` issues an
-    executor-side ``write.text`` of the serialized bulk payload (r07 —
-    previously the relay collected docs to a driver-side buffer, the one
-    driver funnel on a result path flagged by the r06 verdict). With
+    Result rows never pass through the driver: each epoch's bulk payload
+    is an executor-side ``write.text`` into
+    ``{out_dir}/{pickup_count,trip_duration}/bulk-eNNNNNN/``. With
     ``collect_results=True`` the returned DataFrames are a distributed
     read-back of the sink files (``read_bulk_docs``); ``False`` skips even
     that (the CLI path): results then live only in the sink files.
     """
     from ..schemas import PICKUP_COUNT_SCHEMA, TRIP_DURATION_SCHEMA
-    from .sinks import EsBulkFileSink, read_bulk_docs, write_batch_to_es
+    from . import sinks
 
+    doc_types = {  # sink subdir -> (its documents of a fused batch, schema)
+        "pickup_count": (q1_docs, PICKUP_COUNT_SCHEMA),
+        "trip_duration": (q2_docs, TRIP_DURATION_SCHEMA),
+    }
     out_dir = out_dir or tempfile.mkdtemp(prefix="es_sink_")
     ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_pipeline_")
+    for old in doc_types:
+        if os.path.exists(os.path.join(ckpt, old, "metadata")):
+            raise ValueError(
+                f"checkpoint layout changed: {ckpt}/{old} is a query of the"
+                " former two-query pipeline, which now runs as one query"
+                f" under {ckpt}/taxi; use fresh checkpoint and sink dirs"
+            )
     src_opts: dict[str, str] = {}
     if max_files_per_trigger is not None:
         src_opts["maxFilesPerTrigger"] = str(max_files_per_trigger)
@@ -2192,52 +2206,38 @@ def run_taxi_pipeline(
     else:
         raise ValueError(f"unknown source_format: {source_format!r}")
 
-    def relay(sink: EsBulkFileSink, doc_type: str):
-        def body(batch_df: DataFrame, epoch_id: int) -> None:
-            # epoch-addressed bulk dirs: epoch redelivery on recovery
-            # overwrites, never duplicates (exactly-once to the transport);
-            # the write runs in every task — nothing is collected here
-            write_batch_to_es(batch_df, sink, doc_type, epoch_id=epoch_id)
+    es = {t: sinks.EsBulkFileSink(f"{out_dir}/{t}") for t in doc_types}
 
-        return body
+    def body(batch_df: DataFrame, epoch_id: int) -> None:
+        # epoch-addressed bulk dirs: epoch redelivery on recovery
+        # overwrites, never duplicates (exactly-once to the transport);
+        # the writes run in every task — nothing is collected here
+        fused = batch_df.persist()
+        try:
+            for t, (docs, _) in doc_types.items():
+                sinks.write_batch_to_es(docs(fused), es[t], t, epoch_id=epoch_id)
+        finally:
+            fused.unpersist()
 
+    _use_rocksdb_state(spark)
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
     try:
-        queries = []
-        for agg_df, doc_type in (
-            (q1_agg_from_trips(trips), "pickup_count"),
-            (q2_agg_from_trips(trips), "trip_duration"),
-        ):
-            queries.append(
-                agg_df.writeStream.foreachBatch(
-                    relay(EsBulkFileSink(f"{out_dir}/{doc_type}"), doc_type)
-                )
-                .outputMode("append")
-                .option("checkpointLocation", f"{ckpt}/{doc_type}")
-                .trigger(availableNow=True)
-                .start()
-            )
-        for q in queries:  # both run concurrently; await in order
-            q.awaitTermination()
+        (
+            taxi_agg_from_trips(trips)
+            .writeStream.foreachBatch(body)
+            .outputMode("append")
+            .option("checkpointLocation", f"{ckpt}/taxi")
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
-    # 'pickup_count'/'trip_duration' keys are ALWAYS present (the
-    # pre-r07 contract callers may rely on); collect_results=False keeps
-    # the read-back lazy by pointing both at the sink paths instead of
-    # DataFrames over them (results live only in the sink files).
+    # per doc type: DataFrames over the sink files, or the sink paths
     out: dict[str, DataFrame | str] = {"out_dir": out_dir, "checkpoint_dir": ckpt}
-    if collect_results:
-        # distributed read-back of what the executors wrote — results are
-        # DataFrames over the sink files, not a driver-side buffer
-        out["pickup_count"] = read_bulk_docs(
-            spark, f"{out_dir}/pickup_count", PICKUP_COUNT_SCHEMA
-        )
-        out["trip_duration"] = read_bulk_docs(
-            spark, f"{out_dir}/trip_duration", TRIP_DURATION_SCHEMA
-        )
-    else:
-        out["pickup_count"] = f"{out_dir}/pickup_count"
-        out["trip_duration"] = f"{out_dir}/trip_duration"
+    for t, (_, schema) in doc_types.items():
+        path = f"{out_dir}/{t}"
+        out[t] = sinks.read_bulk_docs(spark, path, schema) if collect_results else path
     return out

@@ -311,7 +311,7 @@ def test_single_pass_pipeline_multi_batch(spark, tmp_path):
         checkpoint_dir=str(tmp_path / "ckpt"),
         max_files_per_trigger=1,
     )
-    n_epochs = len(glob.glob(str(tmp_path / "partials" / "q1" / "epoch=*")))
+    n_epochs = len(glob.glob(str(tmp_path / "partials" / "cells" / "epoch=*")))
     assert n_epochs >= 2, "split did not produce multiple micro-batches"
     assert _rows(res["pickup_count"]) == _rows(jobs.q1_streaming(spark, SF_DIR))
     assert _rows(res["trip_duration"]) == _rows(jobs.q2_streaming(spark, SF_DIR))
@@ -333,7 +333,7 @@ def test_single_pass_partials_redelivery_idempotent(spark, tmp_path):
     )
     q1_first = _rows(r1["pickup_count"])
     q2_first = _rows(r1["trip_duration"])
-    epochs_first = sorted(glob.glob(pdir + "/q1/epoch=*"))
+    epochs_first = sorted(glob.glob(pdir + "/cells/epoch=*"))
     r2 = jobs.run_taxi_pipeline_single_pass(
         spark,
         SF_DIR,
@@ -341,7 +341,7 @@ def test_single_pass_partials_redelivery_idempotent(spark, tmp_path):
         checkpoint_dir=str(tmp_path / "ckpt2"),  # fresh -> full redelivery
         max_files_per_trigger=4,
     )
-    assert sorted(glob.glob(pdir + "/q1/epoch=*")) == epochs_first
+    assert sorted(glob.glob(pdir + "/cells/epoch=*")) == epochs_first
     assert _rows(r2["pickup_count"]) == q1_first
     assert _rows(r2["trip_duration"]) == q2_first
 
@@ -367,6 +367,148 @@ def test_pipeline_cli_wire_auto_decompress(spark, tmp_path, capsys):
         _watermark_restricted(spark, taxi.q1_pickup_count(spark, SF_DIR))
     )
     assert n1 == len(expected)
+
+
+def test_pipeline_one_query_one_scan(spark, tmp_path):
+    """Q1 and Q2 share one streaming query: a pipeline call starts
+    exactly one query, and its summed ``numInputRows`` equals the
+    source's line count — every wire line is read once, not once per
+    aggregate."""
+    import threading
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    wire = str(tmp_path / "wire")
+    replay.replay(spark, SF_DIR, wire, adapt="ORIGINAL", chunk_seconds=300)
+    n_lines = 0
+    for path in glob.glob(wire + "/*.json"):
+        with open(path) as f:
+            n_lines += sum(1 for _ in f)
+
+    class Recorder(StreamingQueryListener):
+        def __init__(self):
+            self.lock = threading.Lock()
+            self.started, self.terminated, self.rows = 0, 0, 0
+
+        def onQueryStarted(self, event):  # noqa: N802 - listener API
+            with self.lock:
+                self.started += 1
+
+        def onQueryProgress(self, event):  # noqa: N802
+            with self.lock:
+                self.rows += event.progress.numInputRows
+
+        def onQueryIdle(self, event):  # noqa: N802
+            pass
+
+        def onQueryTerminated(self, event):  # noqa: N802
+            with self.lock:
+                self.terminated += 1
+
+    rec = Recorder()
+    spark.streams.addListener(rec)
+    try:
+        jobs.run_taxi_pipeline(
+            spark,
+            wire,
+            out_dir=str(tmp_path / "out"),
+            max_files_per_trigger=2,
+            source_format="wire",
+            collect_results=False,
+        )
+        deadline = time.time() + 30  # listener events arrive asynchronously
+        while rec.terminated < 1 and time.time() < deadline:
+            time.sleep(0.05)
+        time.sleep(0.5)  # a second query's events would have landed too
+    finally:
+        spark.streams.removeListener(rec)
+    assert (rec.started, rec.terminated) == (1, 1)
+    assert rec.rows == n_lines > 0
+
+
+def _airport_cell_chunk(wire_dir: str) -> None:
+    """One hand-built wire chunk: in one 10-minute window, pickup cell
+    dr5ru7 has 2 trips to JFK (30 and 45 min) and 1 to LGA (20 min), and
+    cell dr5ru4 has a single trip; a trip 25 minutes in closes the
+    window."""
+    from datetime import datetime, timezone
+
+    from flink_stream_processing_refarch_spark.functions import geo
+
+    def iso(epoch_s):
+        return datetime.fromtimestamp(epoch_s, timezone.utc).strftime(
+            "%Y-%m-%dT%H:%M:%S.000Z"
+        )
+
+    def mid(cell):
+        lat_lo, lat_hi, lon_lo, lon_hi = geo.geohash_bbox_py(cell)
+        return (lat_lo + lat_hi) / 2, (lon_lo + lon_hi) / 2
+
+    midtown, other = mid("dr5ru7"), mid("dr5ru4")
+    jfk, lga = mid(sorted(geo.JFK_CELLS)[0]), mid(geo.LGA_G6_CELLS[0])
+    trips = [  # (pickup cell, dropoff point, dropoff minute, duration min)
+        (midtown, jfk, 8, 30),
+        (midtown, jfk, 9, 45),
+        (midtown, lga, 7, 20),
+        (other, midtown, 5, 10),
+        (other, midtown, 25, 10),
+    ]
+    os.makedirs(wire_dir)
+    with open(os.path.join(wire_dir, "chunk-000000.json"), "w") as f:
+        for i, (p, d, minute, dur) in enumerate(trips):
+            drop_s = 1_700_000_400 + minute * 60  # a 10-minute boundary
+            f.write(json.dumps({
+                "type": "trip", "trip_id": i,
+                "pickup_datetime": iso(drop_s - dur * 60),
+                "dropoff_datetime": iso(drop_s),
+                "pickup_lat": p[0], "pickup_lon": p[1],
+                "dropoff_lat": d[0], "dropoff_lon": d[1], "total_amount": 10.0,
+            }) + "\n")
+
+
+def test_pipeline_fused_airport_legs(spark, tmp_path):
+    """Per-airport HAVING on the fused aggregate: a cell with 2 JFK and
+    1 LGA trips yields one JFK doc (sum 75, avg 37.5) and no LGA doc;
+    a 1-trip cell yields no Q1 doc. The fresh checkpoint records the
+    RocksDB state store whatever the session had set."""
+    wire = str(tmp_path / "wire")
+    _airport_cell_chunk(wire)
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
+    )
+    res = jobs.run_taxi_pipeline(
+        spark,
+        wire,
+        out_dir=str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        source_format="wire",
+    )
+    wend = 1_700_001_000_000 - 1
+    assert _rows(res["pickup_count"]) == [("dr5ru7", 3, wend)]
+    assert _rows(res["trip_duration"]) == [("dr5ru7", "JFK", 75, 37.5, wend)]
+
+    with open(str(tmp_path / "ckpt" / "taxi" / "offsets" / "0")) as f:
+        meta = json.loads(f.read().splitlines()[1])
+    assert meta["conf"]["spark.sql.streaming.stateStore.providerClass"].endswith(
+        ".RocksDBStateStoreProvider"
+    )
+
+
+def test_pipeline_refuses_two_query_checkpoint(spark, tmp_path):
+    """A checkpoint root from the former two-query pipeline (one query
+    checkpoint per doc type) fails loudly instead of starting the fused
+    query from offset 0 against a sink that already holds its epochs."""
+    ckpt = tmp_path / "ckpt"
+    for doc_type in ("pickup_count", "trip_duration"):
+        (ckpt / doc_type / "offsets").mkdir(parents=True)
+        (ckpt / doc_type / "metadata").write_text('{"id":"0"}\n')
+    with pytest.raises(ValueError, match="checkpoint layout changed"):
+        jobs.run_taxi_pipeline(
+            spark, SF_DIR, out_dir=str(tmp_path / "out"), checkpoint_dir=str(ckpt)
+        )
+    assert not (ckpt / "taxi").exists()
 
 
 def test_corpus_ingest_streaming_multibatch(spark, duck, tmp_path):

@@ -15,7 +15,7 @@ time order) with ``maxFilesPerTrigger=1`` — 10 micro-batches, each
 spanning one replica's compressed event-time band, so the watermark
 advances between batches and window state must drain. The plans are
 the registry's own (``clean_trips_from_event_stream`` ->
-``q{1,2}_agg_from_trips`` — the exact composition ``q1_stream_df``
+``q{1,2}_agg_from_trips`` — the exact composition ``q1_streaming``
 serves), run to a noop sink with RocksDB state, availableNow.
 
 Reported per query: median wall of N_RUNS, events/s (n_events / wall),
