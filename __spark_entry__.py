@@ -57,40 +57,67 @@ from flink_stream_processing_refarch_spark.streaming import jobs as streaming_jo
 # ``tools/make_ledger.py --changed ...`` (VERDICT r09 #7): changed-this-
 # round entries first in registry order, then every other entry ranked
 # by oldest last-green round (registry order as tiebreak), first 50 win.
-# r15 is the SECOND OPTIMIZATION round: no entry is new and no entry's
-# RESULT changed; the changed set (15 entries, listed in
-# OPTIMIZATION_r15.md's checklist) is every entry whose Spark-side
-# plan this round's optimizations touched —
-#   - the 14 transitive consumers of dedup.corpus_df (the injected-
-#     duplicate corpus now derived in ONE documents scan via a per-doc
-#     variant explode instead of a 3-branch UNION ALL);
-#   - corpus_build (dedup survivorship + contamination verdict folded
-#     into one groupBy(h) over a single tokenize of the training split).
-# Every changed entry re-passed tools/check_oracle.py at sf0.01 (and
-# sf0.001) before each commit; the full-registry sweeps at BOTH SFs
-# are green post-change (OPTIMIZATION_r15.md). The remaining 35 slots
-# finish the staleness sweep VERDICT r14 #3 ordered: the whole r10
-# tail plus the oldest r11 rows — post-r15 min last-green outside the
-# window is r11. Everything rotated out is r11+-green over a
-# results-unchanged plan (LEDGER.md); per-round rotation rationale
-# lives in the git history of this file.
+# The changed set (13 entries, LEDGER.md) is every entry whose plan-
+# building code the one-definition taxi change touched: the Q1/Q2
+# consumers of plans/taxi.py (batch, streaming, the Kinesis wire path
+# and the new taxi_pipeline slot: the production job's sink docs) and
+# the corpus_io entries running the split token clocks (recovery's
+# proof, version expiry). Per-round
+# rotation rationale lives in the git history of this file.
 PRIORITY = [
-    # ---- slots 1-50: the r15-OPTIMIZATION driver window (== LEDGER
-    # next-window, rotation rule VERDICT r09 #7): the 15 entries whose
-    # Spark-side plans this round changed — the injected-duplicate
-    # corpus derived in ONE scan instead of a 3-branch UNION (every
-    # corpus_df consumer: dedup/winnow/simhash/containment/passage/
-    # provenance families) and corpus_build's one-pass dedup+
-    # decontamination fold — first in registry order, then the 35
-    # OLDEST driver-green rows (the full r10 staleness tail VERDICT
-    # r14 #3 ordered in, then oldest r11): post-r15 min last-green
-    # outside the window is r11. Results of every entry are UNCHANGED
-    # and re-proven against the oracle at sf0.01+sf0.001 before commit
-    # (OPTIMIZATION_r15.md). The streaming entries touched only by the
-    # post-termination progress-capture hook (jobs.LAST_RUN_PROGRESS)
-    # are NOT in the changed set: the hook runs after the replay
-    # finishes and cannot alter plan or result; the full-registry
-    # selfcheck re-proves them at both SFs regardless. ----
+    # ---- slots 1-50: the correctness window (== LEDGER next-window) ----
+    "trending_cells",
+    "corpus_vacuum_roundtrip",
+    "corpus_time_travel",
+    "q1_kinesis_wire",
+    "corpus_recover_roundtrip",
+    "trips_clean",
+    "airport_trips",
+    "q1_pickup_count",
+    "q2_trip_duration",
+    "q1_streaming",
+    "q2_streaming",
+    "taxi_pipeline",
+    "trending_cells_streaming",
+    "market_share",
+    "returned_customers",
+    "order_priority",
+    "unshipped_revenue",
+    "trade_volume",
+    "prospect_customers",
+    "product_profit",
+    "lonely_returns",
+    "min_cost_supplier",
+    "ann_pq",
+    "pq_ingest_streaming",
+    "media_decode_wav",
+    "media_decode_ppm",
+    "order_count_distribution",
+    "small_lot_revenue",
+    "brand_volume_revenue",
+    "late_shipments",
+    "important_parts",
+    "adhoc_sql",
+    "dedup_embedding",
+    "bpe_train",
+    "bpe_token_count",
+    "source_signature_terms",
+    "quantile_histogram_streaming",
+    "knn_label_accuracy",
+    "ann_recall_eval",
+    "source_drift",
+    "source_drift_streaming",
+    "importance_resampling",
+    "lm_perplexity",
+    "bm25_score",
+    "bm25_topk_batch",
+    "bm25_topk_batch_ext",
+    "bm25_mrr",
+    "doc_fingerprint",
+    "udtf_word_positions",
+    "split_train_test",
+    # ---- past the window: green rows over plans whose results are
+    # unchanged (see LEDGER.md) ----
     "minhash_signatures",
     "ngram_jaccard",
     "corpus_build",
@@ -127,7 +154,6 @@ PRIORITY = [
     "stream_stream_join",
     "stream_stream_left_join",
     "streaming_dedup",
-    "trending_cells",
     "heavy_hitters_cms",
     "feature_hashing",
     "quantile_histogram",
@@ -141,19 +167,15 @@ PRIORITY = [
     "ann_lsh_multiprobe",
     "semantic_dedup",
     "kmeans_clusters",
-    # ---- past the window: driver-green over plans whose results are
-    # unchanged (see LEDGER.md) ----
     "corpus_upsert_roundtrip",
     "corpus_upsert_streaming",
     "corpus_compact_roundtrip",
     "corpus_layout_roundtrip",
     "corpus_evolve_roundtrip",
     "corpus_delete_roundtrip",
-    "corpus_vacuum_roundtrip",
     "corpus_changes_roundtrip",
     "corpus_pinned_snapshot",
     "cdc_index_refresh",
-    "corpus_time_travel",
     "corpus_cdc_stream",
     "cdc_index_refresh_streaming",
     "lang_id",
@@ -184,11 +206,7 @@ PRIORITY = [
     "ann_lsh",
     "ann_ivf",
     "embedding_norms",
-    "q1_kinesis_wire",
-    "corpus_recover_roundtrip",
     "corpus_redact_roundtrip",
-    "ann_pq",
-    "pq_ingest_streaming",
     "stratified_cap",
     "range_join_bands",
     "priority_lists",
@@ -216,8 +234,6 @@ PRIORITY = [
     "exists_returned_orders",
     "in_large_orders",
     "scalar_below_avg",
-    "trips_clean",
-    "airport_trips",
     "tfidf_top_terms",
     "length_histogram",
     "approx_distinct",
@@ -225,48 +241,7 @@ PRIORITY = [
     "pii_scrub",
     "global_row_number",
     "bigram_lm",
-    "media_decode_wav",
-    "media_decode_ppm",
-    "order_count_distribution",
-    "small_lot_revenue",
-    "brand_volume_revenue",
-    "late_shipments",
-    "important_parts",
-    "adhoc_sql",
-    "dedup_embedding",
-    "bpe_train",
-    "bpe_token_count",
-    "source_signature_terms",
-    "quantile_histogram_streaming",
-    "knn_label_accuracy",
-    "ann_recall_eval",
-    "source_drift",
-    "source_drift_streaming",
-    "importance_resampling",
-    "lm_perplexity",
-    "bm25_score",
-    "bm25_topk_batch",
-    "bm25_topk_batch_ext",
-    "bm25_mrr",
-    "doc_fingerprint",
-    "udtf_word_positions",
-    "split_train_test",
     "split_counts",
-    "q1_pickup_count",
-    "q2_trip_duration",
-    "q1_streaming",
-    "q2_streaming",
-    "taxi_pipeline_single_pass",
-    "trending_cells_streaming",
-    "market_share",
-    "returned_customers",
-    "order_priority",
-    "unshipped_revenue",
-    "trade_volume",
-    "prospect_customers",
-    "product_profit",
-    "lonely_returns",
-    "min_cost_supplier",
 ]
 
 

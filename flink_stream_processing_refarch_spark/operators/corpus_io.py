@@ -1,8 +1,8 @@
 """Corpus output: partitioned parquet writer with a verifiable manifest.
 
 The write side of the training-data pipeline — the batch complement of
-the streaming sinks (`streaming/sinks.py` ES bulk, the single-pass
-pipeline's epoch-addressed partial writer). The reference's sinks are
+the streaming sinks (`streaming/sinks.py`: the ES bulk writer's
+epoch-addressed bulk files). The reference's sinks are
 Kinesis/Elasticsearch (flink-taxi-stream-processor/.../
 ProcessTaxiStream.java:137-150); a corpus engine's primary sink is a
 partitioned columnar layout plus a manifest consumers can trust.
@@ -646,10 +646,11 @@ def get_corpus_retention(out_dir: str) -> int:
         return 0
 
 
-def _token_time_ns(token: str) -> int:
-    """Commit order proxy embedded in every token ('{pid}-{time_ns}').
-    Unparseable tokens sort OLDEST (0) so expiry treats them as past
-    any horizon rather than retaining them forever."""
+def _token_expiry_ns(token: str) -> int:
+    """Commit order proxy embedded in every token ('{pid}-{time_ns}')
+    for version expiry. Unparseable tokens sort OLDEST (0) so expiry
+    treats them as past any horizon rather than retaining them forever
+    (recovery's proof needs the opposite: :func:`_token_time_ns`)."""
     try:
         return int(token.rsplit("-", 1)[1])
     except (IndexError, ValueError):
@@ -2729,7 +2730,7 @@ def expire_corpus_versions(
             except (FileNotFoundError, json.JSONDecodeError, OSError):
                 log = []
             if len(log) >= keep:
-                horizon_ns = _token_time_ns(log[-keep])
+                horizon_ns = _token_expiry_ns(log[-keep])
             else:
                 horizon_ns = 0  # fewer commits than K: keep everything
         expired, kept = [], []
@@ -2738,7 +2739,7 @@ def expire_corpus_versions(
         for name in sorted(os.listdir(out_dir)):
             if not name.startswith(RETIRED_PREFIX):
                 continue
-            t_ns = _token_time_ns(name[len(RETIRED_PREFIX):])
+            t_ns = _token_expiry_ns(name[len(RETIRED_PREFIX):])
             if purge_all or not keep or t_ns < horizon_ns:
                 _shutil.rmtree(
                     os.path.join(out_dir, name), ignore_errors=True

@@ -1,6 +1,13 @@
 """Structured Streaming bindings for the reference's two continuous
 queries (ProcessTaxiStream.java:96-136).
 
+The Q1/Q2 semantics are written once, in ``plans/taxi.py``; this module
+only binds them to streams. Every taxi stream (the bounded replays, the
+wire/Kinesis paths and the ``run_taxi_pipeline`` production job) runs
+the same definitions as the batch queries, keyed by Spark's event-time
+``window()`` instead of batch's epoch-ms window end (why batch keeps its
+own key: the ``plans/taxi.py`` docstring).
+
 Watermark semantics (SURVEY.md §4.3): the reference uses punctuated
 in-band watermarks injected by the producer; Spark derives the watermark
 from the event-time column (``withWatermark``). On bounded input with the
@@ -34,9 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions import geo
-from ..functions.timeutils import duration_min_sql, window_end_ms_sql
-from ..plans.taxi import MIN_PICKUP_COUNT
+from ..plans import taxi
 from ..sources.trips import clean_trip_filter_sql, trip_exprs
 
 # Normalized events schema: what stream_events/load_table emit after the
@@ -105,8 +110,8 @@ def half_source_files(spark: SparkSession, sf_dir: str) -> int:
         # a DIRECTORY of parts (the at-scale shape) must still split by
         # half its file count — the old constant 1 put ONE part per
         # micro-batch, which at the sf10 composite meant 100 epochs of
-        # fixed checkpoint/commit cost (r08 finding: the single-pass
-        # pipeline paid 48x wall for 100x data on exactly this)
+        # fixed checkpoint/commit cost (r08 finding: a taxi pipeline
+        # replay paid 48x wall for 100x data on exactly this)
         src = f"{sf_dir}/events.parquet"
         if os.path.isdir(src):
             n = len(_glob.glob(f"{src}/*.parquet"))
@@ -223,142 +228,32 @@ def wire_trips(ev: DataFrame, watermark_delay: str = "0 seconds") -> DataFrame:
     ).withWatermark("dropoff_ts", watermark_delay)
 
 
-def q1_agg_from_trips(
-    trips: DataFrame, min_count: int | None = MIN_PICKUP_COUNT
-) -> DataFrame:
-    """Q1 windowed aggregation over a (cleaned, watermarked) trip stream:
-    pickup counts per geohash6 per 10-min window, HAVING count >=
-    ``min_count`` (2, ProcessTaxiStream.java:96-107). Shared by every
-    Q1 surface — the oracle-checked streaming query, the wire-ingest
-    path, the pipeline, AND the trending-cells leaderboard
-    (``min_count=None``: quiet windows still rank) — so all agree on
-    one window/timestamp/geohash derivation."""
-    trips = geo.with_geohash(trips, "location", "pickup_lat", "pickup_lon", 6)
-    counts = trips.groupBy(
-        F.window("dropoff_ts", "10 minutes"), "location"
-    ).agg(F.count("*").alias("pickup_count"))
-    if min_count is not None:
-        counts = counts.filter(F.col("pickup_count") >= min_count)
-    return counts.select(
-        "location",
-        "pickup_count",
-        (F.unix_millis("window.end") - 1).alias("timestamp"),
-    )
+def trending_counts_from_trips(trips: DataFrame) -> DataFrame:
+    """Q1's windowed pickup counts over a (cleaned, watermarked) trip
+    stream, before the HAVING: the streaming half of the trending-cells
+    leaderboard (a quiet window's top cells still rank). State is
+    watermark-bounded: one row per in-flight (window, cell), closed
+    windows emit once and leave the store."""
+    return taxi.pickup_counts(trips, taxi.stream_window())
 
 
-AIRPORTS = ("JFK", "LGA")  # classifier precedence order
-_LEG_COLS = [f"{a}_{m}" for a in AIRPORTS for m in ("cnt", "sum")]
-
-
-def with_airport_legs(trips: DataFrame) -> DataFrame:
-    """Trips + Q2's per-trip columns (ProcessTaxiStream.java:110-119):
-    ``airport_code`` is JFK (checked first), LGA or NULL by dropoff;
-    ``duration_min`` is the floored-minute trip duration."""
-    return trips.withColumns(
-        {
-            "airport_code": F.when(
-                geo.near_jfk("dropoff_lat", "dropoff_lon"), F.lit("JFK")
-            ).when(geo.near_lga("dropoff_lat", "dropoff_lon"), F.lit("LGA")),
-            "duration_min": F.expr(
-                duration_min_sql("dropoff_ms", "pickup_ms", "spark")
-            ),
-        }
-    )
+def q1_agg_from_trips(trips: DataFrame) -> DataFrame:
+    """Q1 over a (cleaned, watermarked) trip stream. Every Q1 stream
+    surface (the oracle-checked replay, the wire and Kinesis paths) runs
+    this plan."""
+    return taxi.high_pickup_areas(trips, taxi.stream_window())
 
 
 def q2_agg_from_trips(trips: DataFrame) -> DataFrame:
-    """Q2 windowed aggregation: airport classification (JFK precedence),
-    floored-minute durations, sum+avg per (geohash6, airport, window),
-    HAVING count > 1 (ProcessTaxiStream.java:109-136)."""
-    trips = with_airport_legs(trips).filter(F.col("airport_code").isNotNull())
-    trips = geo.with_geohash(trips, "location", "pickup_lat", "pickup_lon", 6)
-    return _q2_rows(
-        trips.groupBy(
-            F.window("dropoff_ts", "10 minutes"), "location", "airport_code"
-        )
-        .agg(
-            F.sum("duration_min").alias("sum_trip_duration"),
-            F.count("*").alias("cnt"),
-        )
-        .withColumn("timestamp", F.unix_millis("window.end") - 1)
-    )
-
-
-def _q2_rows(groups: DataFrame) -> DataFrame:
-    """Q2 documents of (location, airport_code, sum_trip_duration, cnt,
-    timestamp) groups: HAVING count > 1, avg = sum / count (:123-134)."""
-    return groups.filter(F.col("cnt") > 1).select(
-        "location",
-        "airport_code",
-        "sum_trip_duration",
-        (F.col("sum_trip_duration").cast("double") / F.col("cnt")).alias(
-            "avg_trip_duration"
-        ),
-        "timestamp",
-    )
-
-
-def _cell_aggs() -> list:
-    """Per (geohash6, window) cell: the trip count (Q1) and, per airport
-    leg, its trip count and duration sum (Q2). Legs are disjoint (JFK
-    precedence): each Q2 (cell, airport) group is one leg of one cell."""
-    aggs = [F.count("*").alias("pickup_count")]
-    for a in AIRPORTS:
-        is_a = F.col("airport_code") == a
-        aggs += [
-            F.count_if(is_a).alias(f"{a}_cnt"),
-            F.sum(F.when(is_a, F.col("duration_min"))).alias(f"{a}_sum"),
-        ]
-    return aggs
+    """Q2 over a (cleaned, watermarked) trip stream."""
+    return taxi.trip_durations(trips, taxi.stream_window())
 
 
 def taxi_agg_from_trips(trips: DataFrame) -> DataFrame:
-    """Q1 and Q2 as ONE windowed aggregation (:func:`_cell_aggs` per
-    10-min window and geohash6), as Flink fans one trip stream out to
-    both window aggregates (ProcessTaxiStream.java:87,96,109). Cells
-    that pass neither HAVING never leave the plan; :func:`q1_docs` and
-    :func:`q2_docs` split the rest into the two document streams."""
-    trips = with_airport_legs(
-        geo.with_geohash(trips, "location", "pickup_lat", "pickup_lon", 6)
-    )
-    keep = F.col("pickup_count") >= MIN_PICKUP_COUNT
-    for a in AIRPORTS:
-        keep = keep | (F.col(f"{a}_cnt") > 1)
-    return (
-        trips.groupBy(F.window("dropoff_ts", "10 minutes"), "location")
-        .agg(*_cell_aggs())
-        .filter(keep)
-        .select(
-            "location",
-            "pickup_count",
-            *_LEG_COLS,
-            (F.unix_millis("window.end") - 1).alias("timestamp"),
-        )
-    )
-
-
-def q1_docs(fused: DataFrame) -> DataFrame:
-    """Q1 documents of per-cell aggregates (:func:`_cell_aggs` plus
-    ``timestamp``): HAVING count >= 2 (ProcessTaxiStream.java:96-107)."""
-    return fused.filter(F.col("pickup_count") >= MIN_PICKUP_COUNT).select(
-        "location", "pickup_count", "timestamp"
-    )
-
-
-def q2_docs(fused: DataFrame) -> DataFrame:
-    """Q2 documents of per-cell aggregates, one per airport leg: each leg
-    is one (location, airport, window) group (ProcessTaxiStream.java:109-136)."""
-    legs = F.array(
-        *[
-            F.struct(
-                F.lit(a).alias("airport_code"),
-                F.col(f"{a}_sum").alias("sum_trip_duration"),
-                F.col(f"{a}_cnt").alias("cnt"),
-            )
-            for a in AIRPORTS
-        ]
-    )
-    return _q2_rows(fused.select("location", "timestamp", F.inline(legs)))
+    """Q1 and Q2 as ONE windowed aggregation over a trip stream
+    (:func:`plans.taxi.cell_aggregates`): the state of
+    :func:`run_taxi_pipeline`."""
+    return taxi.cell_aggregates(trips, taxi.stream_window())
 
 
 def q1_from_wire(spark: SparkSession, json_dir: str, **source_opts) -> DataFrame:
@@ -582,43 +477,6 @@ def q2_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(q2_agg_from_trips(stream_clean_trips(spark, sf_dir)))
 
 
-def trending_counts_from_trips(trips: DataFrame) -> DataFrame:
-    """The streaming half of the trending-cells leaderboard: Q1's
-    windowed aggregation WITHOUT the HAVING floor (a quiet window's top
-    cells still rank) — literally ``q1_agg_from_trips(min_count=None)``
-    so the window/timestamp/geohash derivation can never diverge from
-    Q1's (review finding r06). State is watermark-bounded exactly like
-    Q1's: one row per in-flight (window, cell), closed windows emit
-    once and leave the store."""
-    return q1_agg_from_trips(trips, min_count=None)
-
-
-def rank_trending(counts: DataFrame) -> DataFrame:
-    """Compaction-side rank over FINALIZED windows: top TREND_TOP cells
-    per window. Ranking needs the whole window's counts at once, which a
-    streaming append plan can't see until the watermark closes the
-    window — so the rank runs where the reference's stack ran it (the
-    Kibana dashboard over the ES sink,
-    elasticsearch/kibana-visualizations-and-dashboard.json): batch-side
-    over the emitted windows. The rank's input is post-aggregation
-    (|windows| x |active cells| rows, not trips), partitioned by window
-    — at 100 TB this is the cheap tail of the pipeline."""
-    from pyspark.sql import Window
-
-    from ..plans.taxi import TREND_TOP
-
-    rn = F.row_number().over(
-        Window.partitionBy("timestamp").orderBy(
-            F.desc("pickup_count"), F.asc("location")
-        )
-    )
-    return (
-        counts.withColumn("rank", rn)
-        .filter(F.col("rank") <= TREND_TOP)
-        .select("timestamp", "location", "pickup_count", "rank")
-    )
-
-
 def q_trending_cells_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of ``plans.taxi.q_trending_cells`` (VERDICT r05
     item 3): the continuously-updating leaderboard the reference serves
@@ -629,7 +487,7 @@ def q_trending_cells_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = _run_to_memory(
         trending_counts_from_trips(stream_clean_trips(spark, sf_dir))
     )
-    return rank_trending(counts)
+    return taxi.rank_trending(counts)
 
 
 # ---------------------------------------------------------------------------
@@ -1547,103 +1405,31 @@ FROM events GROUP BY user_id
 """
 
 
-def run_taxi_pipeline_single_pass(
-    spark: SparkSession,
-    sf_dir: str,
-    partials_dir: str | None = None,
-    checkpoint_dir: str | None = None,
-    max_files_per_trigger: int | str | None = "auto",
-) -> dict[str, DataFrame]:
-    """Q1 + Q2 from one streaming pass with NO in-plan state: the
-    partial-aggregate + compaction alternative to :func:`run_taxi_pipeline`.
-    ``foreachBatch`` writes the batch's per-cell PARTIAL aggregates
-    (:func:`_cell_aggs` per (location, window end), plus the max event
-    time) epoch-addressed (``.../cells/epoch=N``, overwrite — recovery
-    redelivery is idempotent). Merge happens once at the end: partial
-    counts/sums merge associatively per (location, window), both HAVINGs
-    apply only post-merge (:func:`q1_docs`, :func:`q2_docs`), and the
-    emission rule (window end <= final watermark = max clean-trip event
-    time, exactly q1/q2_streaming's) filters on the max event time
-    carried through the partials. This is window-correct under ANY
-    micro-batch split — the r01 caveat (per-batch FINAL aggregation
-    breaks windows spanning batches) does not apply because nothing final
-    happens per batch; see
-    tests/test_streaming.py::test_single_pass_pipeline_multi_batch.
+def q_taxi_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Registry surface of the production job: the Q1 documents
+    :func:`run_taxi_pipeline` wrote to its ES bulk sink, read back (same
+    schema and emission rule as q1_streaming, so the same oracle
+    applies). maxFilesPerTrigger = half the source's files
+    (:func:`half_source_files`) makes every check, at any SF, run >= 2
+    micro-batches whose windows merge in the state store. The sink and
+    checkpoint are throwaway: the docs are materialized, then both go."""
+    import shutil
 
-    Scale: per-batch partials are post-aggregate (O(active windows x
-    cells), never raw trips), written distributed — the driver holds no
-    rows; the compaction is one small batch job. The trade vs in-plan
-    window state: partials storage instead of a state store, one merge
-    job instead of per-batch state lookups.
-    """
-    src_opts: dict[str, str] = {}
-    if max_files_per_trigger == "auto":
-        max_files_per_trigger = half_source_files(spark, sf_dir)
-    if max_files_per_trigger is not None:
-        src_opts["maxFilesPerTrigger"] = str(max_files_per_trigger)
-    trips = stream_clean_trips(spark, sf_dir, **src_opts)
     base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    pdir = partials_dir or tempfile.mkdtemp(prefix="taxi_partials_", dir=base)
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_taxi_sp_", dir=base)
-
-    def body(batch_df: DataFrame, epoch_id: int) -> None:
-        # The partials' groups cover every clean trip in the batch, so
-        # max(max_ms) over all of them is the final watermark. They write
-        # at the aggregation's own partition width (a handful during
-        # bounded replays): a coalesce(1) funnel was measurable at the
-        # sf10 composite (r08 finding).
-        (
-            with_airport_legs(
-                geo.with_geohash(batch_df, "location", "pickup_lat", "pickup_lon", 6)
-            )
-            .groupBy("location", F.expr(window_end_ms_sql("dropoff_ms")).alias("wend"))
-            .agg(*_cell_aggs(), F.max("dropoff_ms").alias("max_ms"))
-            .write.mode("overwrite")
-            .parquet(f"{pdir}/cells/epoch={int(epoch_id)}")
-        )
-
-    # Same bounded-replay sizing rationale as _run_to_memory: the
-    # per-epoch aggregates are small, so session-wide shuffle widths
-    # just add scheduling floor per epoch.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
+    out_dir = tempfile.mkdtemp(prefix="es_sink_", dir=base)
+    ckpt = tempfile.mkdtemp(prefix="ckpt_pipeline_", dir=base)
     try:
-        q = (
-            trips.writeStream.foreachBatch(body)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        res = run_taxi_pipeline(
+            spark,
+            sf_dir,
+            out_dir=out_dir,
+            checkpoint_dir=ckpt,
+            max_files_per_trigger=half_source_files(spark, sf_dir),
         )
-        q.awaitTermination()
+        return res["pickup_count"].localCheckpoint(eager=True)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-    partials = spark.read.parquet(f"{pdir}/cells")
-    wm = partials.agg(F.max("max_ms").alias("wm_ms"))
-    cells = (
-        partials.groupBy("location", "wend")
-        .agg(*[F.sum(c).alias(c) for c in ("pickup_count", *_LEG_COLS)])
-        .crossJoin(F.broadcast(wm))
-        .filter(F.col("wend") - 1 < F.col("wm_ms"))
-        .withColumn("timestamp", F.col("wend") - 1)
-    )
-    return {
-        "pickup_count": q1_docs(cells),
-        "trip_duration": q2_docs(cells),
-        "partials_dir": pdir,
-        "checkpoint_dir": ckpt,
-    }
-
-
-def q_taxi_pipeline_single_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-checkable surface of the single-pass pipeline: its Q1
-    result (same schema and emission rule as q1_streaming, so the same
-    oracle applies); the adaptive multi-batch default (maxFilesPerTrigger
-    = half the normalized source's file count, :func:`half_source_files`)
-    means every driver check — at any SF — proves window merges across
-    micro-batch splits."""
-    return run_taxi_pipeline_single_pass(spark, sf_dir)["pickup_count"]
+        shutil.rmtree(out_dir, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2032,7 +1818,7 @@ QUERIES = {
     "decontaminate_streaming": q_decontaminate_streaming,
     "stateful_sessionize": q_stateful_sessionize,
     "session_windows_streaming": q_session_windows_streaming,
-    "taxi_pipeline_single_pass": q_taxi_pipeline_single_pass,
+    "taxi_pipeline": q_taxi_pipeline,
     "trending_cells_streaming": q_trending_cells_streaming,
     "heavy_hitters_streaming": q_heavy_hitters_streaming,
     "quantile_histogram_streaming": q_quantile_histogram_streaming,
@@ -2061,9 +1847,9 @@ def _trending_cells_streaming_oracle() -> str:
 
 
 ORACLES = {
-    # Q1 via the single-pass partial-merge pipeline: same result
-    # contract and emission rule as q1_streaming -> same oracle.
-    "taxi_pipeline_single_pass": _q1_streaming_oracle(),
+    # Q1 docs of the production pipeline's sink: same result contract
+    # and emission rule as q1_streaming -> same oracle.
+    "taxi_pipeline": _q1_streaming_oracle(),
     # Q1 through the Kinesis swap points over the wire fake: the
     # transport must be value-invisible, so q1_streaming's oracle
     # applies verbatim — any serialization/routing defect breaks it.
@@ -2149,8 +1935,9 @@ def run_taxi_pipeline(
     the watermark closes it — correct under ANY micro-batch split
     (``max_files_per_trigger`` throttling, restarts from
     ``checkpoint_dir``). ``foreachBatch`` persists the small finalized
-    batch and writes its two document streams (:func:`q1_docs`,
-    :func:`q2_docs`): the stateful plan runs once per epoch.
+    batch and writes its two document streams
+    (:func:`plans.taxi.q1_of_cells`, :func:`plans.taxi.q2_of_cells`): the
+    stateful plan runs once per epoch.
 
     Emission semantics match q1_streaming/q2_streaming (and Flink's
     in-band watermark): windows closed by the final watermark = max event
@@ -2170,8 +1957,8 @@ def run_taxi_pipeline(
     from . import sinks
 
     doc_types = {  # sink subdir -> (its documents of a fused batch, schema)
-        "pickup_count": (q1_docs, PICKUP_COUNT_SCHEMA),
-        "trip_duration": (q2_docs, TRIP_DURATION_SCHEMA),
+        "pickup_count": (taxi.q1_of_cells, PICKUP_COUNT_SCHEMA),
+        "trip_duration": (taxi.q2_of_cells, TRIP_DURATION_SCHEMA),
     }
     out_dir = out_dir or tempfile.mkdtemp(prefix="es_sink_")
     ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_pipeline_")

@@ -1,11 +1,13 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout root: the package, __spark_entry__ and tools/ import from it
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from flink_stream_processing_refarch_spark.schemas import TESTDATA_TABLES
 from flink_stream_processing_refarch_spark.session import get_spark
@@ -29,7 +31,6 @@ def duck():
 
 def assert_matches_oracle(spark, duck, fn, sql, min_rows=0):
     """Order-insensitive exact compare of a Spark query vs DuckDB SQL."""
-    sys.path.insert(0, "/root/repo")
     from tools.check_oracle import normalize, rows_equal
 
     sdf = fn(spark, SF_DIR)

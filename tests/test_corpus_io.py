@@ -3049,6 +3049,19 @@ def test_recover_refuses_ambiguous_residue_when_log_saturated(spark):
         assert rep["discarded_staging"] == ["crashed"]
 
 
+def test_absence_is_no_proof_past_an_unparseable_oldest_token():
+    """A saturated commit log whose OLDEST entry is a token this module
+    did not mint bounds nothing: a residue token's absence is ambiguous,
+    so recovery must raise rather than roll back. The expiry clock reads
+    an unparseable token as time 0; if recovery read it that way too,
+    every parseable residue would count as younger and be rolled back."""
+    log = ["external-residue"] + [
+        f"1-{1000 + i}" for i in range(corpus_io.COMMITTED_TOKENS_KEEP - 1)
+    ]
+    assert not corpus_io._absence_is_proof("2-5", log)
+    assert corpus_io._absence_is_proof("2-5", log[:3])  # never pruned
+
+
 def test_vacuum_holds_one_lease_across_both_phases(spark, monkeypatch):
     """r14 (ADVICE r13 #4): vacuum's recovery phase and file sweep run
     under ONE 'vacuum' lease — no gap where a takedown could start and

@@ -4,10 +4,7 @@ round can't silently break them."""
 
 from __future__ import annotations
 
-import sys
 from collections import Counter
-
-sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entry
 

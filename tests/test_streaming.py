@@ -55,7 +55,7 @@ def test_trending_cells_streaming_multibatch(spark):
             jobs.stream_clean_trips(spark, SF_DIR, maxFilesPerTrigger=mfpt)
         )
     )
-    got = jobs.rank_trending(counts)
+    got = taxi.rank_trending(counts)
     expect = _watermark_restricted(spark, taxi.q_trending_cells(spark, SF_DIR))
     assert _rows(got) == _rows(expect)
 
@@ -296,54 +296,31 @@ def test_pipeline_multibatch_windows_span_batches(spark, tmp_path):
     )
 
 
-def test_single_pass_pipeline_multi_batch(spark, tmp_path):
-    """The r01 caveat, explicitly: per-batch FINAL aggregation breaks
-    windows that span micro-batches. The single-pass pipeline aggregates
-    PARTIALLY per batch and merges at compaction, so under a forced
-    many-batch split (maxFilesPerTrigger=1 over the multi-file
-    normalized source, with rows round-robined across files — every
-    window is guaranteed to span batches) BOTH query results must equal
-    the in-plan windowed-state path (q1_streaming / q2_streaming)."""
-    res = jobs.run_taxi_pipeline_single_pass(
-        spark,
-        SF_DIR,
-        partials_dir=str(tmp_path / "partials"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,
-    )
-    n_epochs = len(glob.glob(str(tmp_path / "partials" / "cells" / "epoch=*")))
-    assert n_epochs >= 2, "split did not produce multiple micro-batches"
-    assert _rows(res["pickup_count"]) == _rows(jobs.q1_streaming(spark, SF_DIR))
-    assert _rows(res["trip_duration"]) == _rows(jobs.q2_streaming(spark, SF_DIR))
+def test_taxi_pipeline_slot_runs_multi_batch(spark, monkeypatch):
+    """The ``taxi_pipeline`` registry slot (oracle-checked through
+    ``test_extended_streaming_matches_oracle``) must split its bounded
+    source into >= 2 data micro-batches at SF_DIR, so every oracle check
+    also proves windows merging across batches in the state store. A
+    data batch advances the source offset its offsets-log entry records;
+    a trailing no-data batch repeats it."""
+    from pathlib import Path
 
+    seen = []
+    run = jobs.run_taxi_pipeline
 
-def test_single_pass_partials_redelivery_idempotent(spark, tmp_path):
-    """Recovery redelivery: re-running the bounded stream against the
-    SAME partials directory (fresh checkpoint -> every epoch is
-    redelivered and overwritten) must leave the partials store and both
-    merged results exactly as after the first run — the epoch-overwrite
-    idempotency the partial writer claims."""
-    pdir = str(tmp_path / "partials")
-    r1 = jobs.run_taxi_pipeline_single_pass(
-        spark,
-        SF_DIR,
-        partials_dir=pdir,
-        checkpoint_dir=str(tmp_path / "ckpt1"),
-        max_files_per_trigger=4,
-    )
-    q1_first = _rows(r1["pickup_count"])
-    q2_first = _rows(r1["trip_duration"])
-    epochs_first = sorted(glob.glob(pdir + "/cells/epoch=*"))
-    r2 = jobs.run_taxi_pipeline_single_pass(
-        spark,
-        SF_DIR,
-        partials_dir=pdir,
-        checkpoint_dir=str(tmp_path / "ckpt2"),  # fresh -> full redelivery
-        max_files_per_trigger=4,
-    )
-    assert sorted(glob.glob(pdir + "/cells/epoch=*")) == epochs_first
-    assert _rows(r2["pickup_count"]) == q1_first
-    assert _rows(r2["trip_duration"]) == q2_first
+    def spy(*args, **kwargs):
+        res = run(*args, **kwargs)
+        log = Path(res["checkpoint_dir"], "taxi", "offsets")
+        seen.append({
+            p.read_text().splitlines()[-1]
+            for p in log.iterdir()
+            if p.name.isdigit()
+        })
+        return res
+
+    monkeypatch.setattr(jobs, "run_taxi_pipeline", spy)
+    assert jobs.QUERIES["taxi_pipeline"](spark, SF_DIR).count() > 0
+    assert len(seen) == 1 and len(seen[0]) >= 2, seen
 
 
 def test_pipeline_cli_wire_auto_decompress(spark, tmp_path, capsys):

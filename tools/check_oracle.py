@@ -11,10 +11,12 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(TOOLS))
 
 import duckdb  # noqa: E402
 
@@ -22,7 +24,7 @@ import __spark_entry__ as entry  # noqa: E402
 from flink_stream_processing_refarch_spark.schemas import TESTDATA_TABLES  # noqa: E402
 from flink_stream_processing_refarch_spark.session import get_spark  # noqa: E402
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, TOOLS)
 from check_oracle_types import hostile_columns  # noqa: E402
 
 

@@ -23,17 +23,20 @@ PRIORITY order is expected to MATCH the plan — the judge can check
 Run: python tools/make_ledger.py [--changed a,b,c]   (writes LEDGER.md;
 rerun at each round end after the driver drops the new CORRECTNESS
 file, and at round open with --changed once the round's changed set is
-known)
+known). :func:`render` returns the table text without writing it.
 """
 
 from __future__ import annotations
 
 import glob
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+LEDGER = os.path.join(ROOT, "LEDGER.md")
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry  # noqa: E402
 
@@ -62,9 +65,11 @@ def plan_next_window(
     return (head + tail)[:50]
 
 
-def main() -> None:
+def render(changed: list[str] | None = None) -> str:
+    """LEDGER.md's text for the ``changed`` set; None reuses the set
+    recorded in the existing table."""
     greens: dict[str, tuple[int, str]] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         rnd = int(re.search(r"_r(\d+)", path).group(1))
         for name, row in json.load(open(path)).items():
             if row.get("err"):
@@ -78,21 +83,16 @@ def main() -> None:
 
     basis = max(
         (int(re.search(r"_r(\d+)", p).group(1))
-         for p in glob.glob("/root/repo/CORRECTNESS_r*.json")),
+         for p in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))),
         default=0,
     )
-    changed: list[str] = []
-    explicit = False
-    for i, a in enumerate(sys.argv):
-        if a == "--changed" and i + 1 < len(sys.argv):
-            changed = [c for c in sys.argv[i + 1].split(",") if c]
-            explicit = True
-    if not explicit:
-        # sticky changed set: a regeneration without --changed (e.g. the
-        # pytest wrapper) must not silently wipe the round's declared
-        # plan — reuse the set recorded in the existing table
+    if changed is None:
+        # sticky changed set: a regeneration without --changed must not
+        # silently wipe the round's declared plan — reuse the set
+        # recorded in the existing table
+        changed = []
         try:
-            text = open("/root/repo/LEDGER.md").read()
+            text = open(LEDGER).read()
             m = re.search(
                 r"Changed set used for this plan:\n(.*?)\.\n", text, re.S
             )
@@ -158,10 +158,18 @@ def main() -> None:
         f"{len(missing)} awaiting their first driver window "
         f"({', '.join(missing) if missing else 'none'}).",
     ]
-    with open("/root/repo/LEDGER.md", "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"wrote LEDGER.md: {len(names)} entries, "
-          f"{len(missing)} awaiting first driver row")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    changed = None
+    for i, a in enumerate(sys.argv):
+        if a == "--changed" and i + 1 < len(sys.argv):
+            changed = [c for c in sys.argv[i + 1].split(",") if c]
+    text = render(changed)
+    with open(LEDGER, "w") as f:
+        f.write(text)
+    print(f"wrote LEDGER.md: {text.splitlines()[-1]}")
 
 
 if __name__ == "__main__":

@@ -11,7 +11,7 @@ other tables link to sf0.1 unchanged.
 Methodology mirrors bench.py: median of N_RUNS=3 per query, headline
 events/s = 2 x n_events / (q1 + q2), as in bench.py. Queries run through the same plans the
 registry serves (taxi.q1_pickup_count / q2_trip_duration and the
-single-pass streaming pipeline). A throughput-holding decade means the
+taxi_pipeline production job). A throughput-holding decade means the
 walls grow ~linearly while events/s holds at-or-above the sf0.1 figure
 (amortizing the fixed local scheduling floor, it normally RISES).
 
@@ -86,7 +86,7 @@ def main() -> None:
     cases = {
         "q1_pickup_count": taxi.q1_pickup_count,
         "q2_trip_duration": taxi.q2_trip_duration,
-        "taxi_pipeline_single_pass": jobs.q_taxi_pipeline_single_pass,
+        "taxi_pipeline": jobs.q_taxi_pipeline,
     }
     res: dict[str, dict[str, float]] = {}
     n_events: dict[str, int] = {}

@@ -2,7 +2,7 @@
 decade up, multi-batch, with bounded-state evidence.
 
 SCALING.md's taxi decade (tools/scale_taxi.py) covers the batch plans
-and the single-pass pipeline; the streaming twins (q1_streaming /
+and the taxi pipeline; the streaming twins (q1_streaming /
 q2_streaming, the A1-A4 path: watermark + append-mode windowed agg +
 HAVING) had sf0.1 evidence only, and at sf0.1 the bounded availableNow
 replay is a single micro-batch — no cross-batch state, no eviction.
