@@ -57,27 +57,34 @@ from flink_stream_processing_refarch_spark.streaming import jobs as streaming_jo
 # ``tools/make_ledger.py --changed ...`` (VERDICT r09 #7): changed-this-
 # round entries first in registry order, then every other entry ranked
 # by oldest last-green round (registry order as tiebreak), first 50 win.
-# The changed set (13 entries, LEDGER.md) is every entry whose plan-
-# building code the one-definition taxi change touched: the Q1/Q2
-# consumers of plans/taxi.py (batch, streaming, the Kinesis wire path
-# and the new taxi_pipeline slot: the production job's sink docs) and
-# the corpus_io entries running the split token clocks (recovery's
-# proof, version expiry). Per-round
+# The changed set (15 entries, LEDGER.md) is every entry that runs a
+# corpus writer now committing through the one shared rewrite
+# transaction (corpus_io._rewrite_partitions): the 13 corpus_io
+# roundtrip/streaming entries plus the two CDC index refreshes, which
+# upsert and delete. Per-round
 # rotation rationale lives in the git history of this file.
 PRIORITY = [
     # ---- slots 1-50: the correctness window (== LEDGER next-window) ----
-    "trending_cells",
     "corpus_vacuum_roundtrip",
     "corpus_time_travel",
-    "q1_kinesis_wire",
     "corpus_recover_roundtrip",
-    "trips_clean",
-    "airport_trips",
+    "corpus_upsert_roundtrip",
+    "corpus_upsert_streaming",
+    "corpus_compact_roundtrip",
+    "corpus_layout_roundtrip",
+    "corpus_evolve_roundtrip",
+    "corpus_delete_roundtrip",
+    "corpus_changes_roundtrip",
+    "corpus_pinned_snapshot",
+    "cdc_index_refresh",
+    "corpus_cdc_stream",
+    "cdc_index_refresh_streaming",
+    "corpus_redact_roundtrip",
+    "taxi_pipeline",
     "q1_pickup_count",
     "q2_trip_duration",
     "q1_streaming",
     "q2_streaming",
-    "taxi_pipeline",
     "trending_cells_streaming",
     "market_share",
     "returned_customers",
@@ -108,6 +115,12 @@ PRIORITY = [
     "source_drift",
     "source_drift_streaming",
     "importance_resampling",
+    # ---- past the window: green rows over plans whose results are
+    # unchanged (see LEDGER.md) ----
+    "trending_cells",
+    "q1_kinesis_wire",
+    "trips_clean",
+    "airport_trips",
     "lm_perplexity",
     "bm25_score",
     "bm25_topk_batch",
@@ -116,8 +129,6 @@ PRIORITY = [
     "doc_fingerprint",
     "udtf_word_positions",
     "split_train_test",
-    # ---- past the window: green rows over plans whose results are
-    # unchanged (see LEDGER.md) ----
     "minhash_signatures",
     "ngram_jaccard",
     "corpus_build",
@@ -167,17 +178,6 @@ PRIORITY = [
     "ann_lsh_multiprobe",
     "semantic_dedup",
     "kmeans_clusters",
-    "corpus_upsert_roundtrip",
-    "corpus_upsert_streaming",
-    "corpus_compact_roundtrip",
-    "corpus_layout_roundtrip",
-    "corpus_evolve_roundtrip",
-    "corpus_delete_roundtrip",
-    "corpus_changes_roundtrip",
-    "corpus_pinned_snapshot",
-    "cdc_index_refresh",
-    "corpus_cdc_stream",
-    "cdc_index_refresh_streaming",
     "lang_id",
     "decontaminate",
     "token_count_bpe",
@@ -206,7 +206,6 @@ PRIORITY = [
     "ann_lsh",
     "ann_ivf",
     "embedding_norms",
-    "corpus_redact_roundtrip",
     "stratified_cap",
     "range_join_bands",
     "priority_lists",

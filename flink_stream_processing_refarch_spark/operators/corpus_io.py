@@ -19,18 +19,35 @@ Design for 100 TB:
   - the manifest is written AFTER a read-back of the committed files
     (counts come from what landed, not from what was attempted), so a
     consumer checking ``verify_manifest`` never trusts a partial write.
+
+Every writer that rewrites partitions of a live corpus (upsert,
+compaction, layout clustering, predicate delete, column redaction)
+plans its own rewrite — the frame, the partition keys it replaces and
+the row counts it expects — and commits through ONE transaction,
+:func:`_rewrite_partitions`: fence, staged swap, fence, read-back of
+the rewritten partitions, count check, manifest commit, cleanup. Two commit kinds
+finish it: layout-only (compact, layout: content fingerprints checked,
+file lists refreshed, no commit token) and content-changing (upsert,
+delete, redact: touched partitions merged into the manifest and
+committed under the writer's token). Partition columns are the
+manifest's: only the corpus build and an upsert that rebuilds a lost
+manifest take them as an argument, and an upsert naming different
+columns than the manifest records raises before any write.
 """
 
 from __future__ import annotations
 
 import contextlib
+import glob
 import json
 import os
+import shutil
 import threading
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 MANIFEST = "_corpus_manifest.json"
 
@@ -58,16 +75,6 @@ RETENTION = "_corpus_retention.json"
 #: Spark scans ignore them; distinct from ``_trash_`` so crash recovery
 #: never classifies a RETIRED version as rollback residue.
 RETIRED_PREFIX = "_retired_"
-
-#: measurement seam for the r14 decade A/B
-#: (tools/scale_checkpoint_ab.py): True restores the r10-era eager
-#: corpus-sized ``localCheckpoint`` on the FULL-REWRITE writers
-#: (layout clustering, column redaction) that r14 removed — the
-#: staged swap already guarantees the source files are untouched
-#: until the post-job renames, so the snapshot bought no safety and
-#: roughly doubled the rewrite's I/O. Production default: False.
-EAGER_REWRITE_CHECKPOINT = False
-
 
 class MaintenanceLeaseHeld(RuntimeError):
     """Another writer holds the corpus maintenance lease."""
@@ -398,8 +405,6 @@ def _manifest_schema(out_dir: str):
     before the evolution physically LACK the new columns, so a
     footer-sampled schema depends on which file the sampler hits —
     only the manifest knows the full current width."""
-    from pyspark.sql import types as T
-
     try:
         with open(os.path.join(out_dir, MANIFEST)) as f:
             recorded = json.load(f).get("schema")
@@ -667,10 +672,9 @@ def _finish_swap_cleanup(out_dir: str, leftovers) -> None:
     is on, keeping prior committed versions' bytes findable for
     :func:`pin_corpus_version` / the pin machinery's displaced-file
     search. The token is recovered from the trash dir's own name, so
-    every deferred-cleanup call site stays one line."""
-    import shutil as _shutil
-
-    for d in leftovers or ():
+    both callers (:func:`_rewrite_partitions`, recovery's roll-forward)
+    pass just the two dirs."""
+    for d in leftovers:
         base = os.path.basename(d)
         if base.startswith("_trash_") and get_corpus_retention(out_dir):
             token = base[len("_trash_"):]
@@ -681,7 +685,7 @@ def _finish_swap_cleanup(out_dir: str, leftovers) -> None:
                     continue
             except OSError:
                 pass  # cross-op name collision etc.: fall through
-        _shutil.rmtree(d, ignore_errors=True)
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def _read_corpus(
@@ -715,8 +719,6 @@ def _read_corpus(
     without evolution every corpus file shares the schema). Callers
     that union the read-back with typed user frames cast the partition
     columns back explicitly (upsert does)."""
-    from pyspark.sql import types as T
-
     source = schema_hint or _manifest_schema(out_dir)
     if source is None:
         leaf = None
@@ -934,14 +936,14 @@ def upsert_corpus(
     like ``source`` don't change for an existing doc. Moving a key
     across partitions requires rewriting both partitions explicitly.
 
-    Write safety (r10): the merged frame is ``localCheckpoint``-ed and
-    the commit is STAGED — the Spark write lands in a private staging
-    dir, then a token-checked fence gates two renames per touched
-    partition (:func:`_staged_swap_write`), so neither the write job
-    nor a TTL break during it can clobber a successor's work. After the
-    swap, the touched partitions' read-back counts are CHECKED against
-    the pre-write plan's expected counts — a partial commit raises
-    instead of being blessed into the manifest.
+    Write safety: the merged frame is ``localCheckpoint``-ed and
+    committed through :func:`_rewrite_partitions` — a private staging
+    write, token-checked fences around two renames per touched
+    partition, and a read-back whose counts must equal the pre-write
+    plan's (a partial commit raises instead of being blessed into the
+    manifest). ``partition_cols`` must equal the manifest's: a corpus
+    partitioned differently raises ValueError before any write (the
+    argument only decides the layout when a crash lost the manifest).
 
     Manifest refresh is INCREMENTAL: only the touched partitions are
     read back (partition-pruned scan) and their counts merged into the
@@ -978,9 +980,200 @@ def upsert_corpus(
     coerced manifest schema.
     """
     with corpus_lease(out_dir, "upsert") as tok:
-        return _upsert_corpus_locked(
-            delta, out_dir, key_cols, partition_cols, max_records_per_file,
-            tok, allow_schema_evolution,
+        spark = delta.sparkSession
+        try:
+            with open(os.path.join(out_dir, MANIFEST)) as f:
+                prior = json.load(f)
+        except (FileNotFoundError, json.JSONDecodeError):
+            # missing/corrupt manifest (crash between data commit and
+            # manifest dump): proceed with the merge and REBUILD the
+            # manifest from a full read-back afterwards — the recovery
+            # path, where a full scan is the correct price
+            prior = None
+        if prior is not None and (
+            tuple(prior["partition_cols"]) != tuple(partition_cols)
+        ):
+            # the swap would lay a differently-nested tree over the live
+            # layout, and every reader of the corpus would fail
+            raise ValueError(
+                "upsert_corpus: the corpus is partitioned by "
+                f"{tuple(prior['partition_cols'])}, not "
+                f"{tuple(partition_cols)} — pass the manifest's "
+                "partition_cols"
+            )
+        # with no manifest the read-back cannot trust a single footer
+        # (the corpus may have evolved) — recover the union width from
+        # the files
+        hint = (
+            _recovered_schema(spark, out_dir, partition_cols)
+            if prior is None
+            else None
+        )
+        # ONE pass over the delta computes BOTH pre-merge facts: per-key
+        # counts carry the dup check, and the touched partition combos
+        # ride along as collected structs (bounded by the number of
+        # physical partitions, never by delta rows)
+        _psets = delta.groupBy(*[F.col(c) for c in key_cols]).agg(
+            F.count("*").alias("_c"),
+            F.collect_set(
+                F.struct(*[F.col(c) for c in partition_cols])
+            ).alias("_ps"),
+        )
+        # every aggregate below PARTIALLY aggregates (max / collect_set
+        # merge map-side), so the final reducer sees one bounded row per
+        # task — never one row per delta key
+        _summary = _psets.select(
+            F.col("_c"),
+            F.when(
+                F.col("_c") > 1, F.struct(*[F.col(c) for c in key_cols])
+            ).alias("_k"),
+            F.explode("_ps").alias("_p"),
+        ).agg(
+            F.max("_c").alias("_maxc"),
+            F.max("_k").alias("_dupkey"),
+            F.collect_set("_p").alias("_touched"),
+        ).collect()[0]
+        touched = [
+            tuple(t[c] for c in partition_cols) for t in _summary["_touched"]
+        ]
+        if not touched:  # empty delta: nothing to merge
+            if prior is not None:
+                return prior
+            manifest = _manifest_from_files(
+                spark, out_dir, partition_cols, schema_hint=hint
+            )
+            manifest["schema"] = json.loads(hint.json())
+            return _dump_manifest(out_dir, manifest, tok)
+        # delta-wins needs ONE winner per key; two delta rows with the
+        # same key would tie on _pri and the survivor would be
+        # shuffle-order nondeterministic — refuse loudly instead of
+        # committing a coin flip
+        if _summary["_maxc"] is not None and _summary["_maxc"] > 1:
+            raise ValueError(
+                "upsert_corpus: delta contains duplicate key "
+                f"{tuple(_summary['_dupkey'])} — collapse the delta "
+                "to one row per key (e.g. latest revision) before upserting"
+            )
+        pred = _partition_pred(partition_cols, touched)
+        # string-schema read-back (string partition columns, matching
+        # the string-rendered pred above); cast back to the delta's
+        # declared types so unionByName merges type-identical frames
+        existing = _read_corpus(
+            spark, out_dir, partition_cols, hint
+        ).filter(pred)
+        corpus_schema = existing.schema  # authority BEFORE the cast
+        # shared columns must KEEP the CORPUS's types, with or without
+        # the evolution flag: unionByName would silently coerce to the
+        # wider type, the coerced schema would become the manifest
+        # authority, and untouched partitions' files — written with the
+        # old type — would then fail or silently change type at scan.
+        # Evolution WIDENS (adds columns); it never retypes. A delta
+        # column whose type upcasts LOSSLESSLY to the corpus type (int
+        # delta into a bigint corpus) is cast up here; anything else
+        # raises. Data columns compare against the read authority
+        # (_read_corpus: hint / manifest / footer); partition columns —
+        # structurally STRING in the read-back — compare against the
+        # manifest-recorded typed schema.
+        recorded = (
+            T.StructType.fromJson(prior["schema"])
+            if prior is not None and prior.get("schema") is not None
+            else None
+        )
+        corpus_types = {
+            f.name: f.dataType
+            for f in corpus_schema.fields
+            if f.name not in partition_cols
+        }
+        if recorded is not None:
+            corpus_types.update(
+                {c: recorded[c].dataType for c in partition_cols
+                 if c in set(recorded.names)}
+            )
+        retyped = []
+        for c in delta.columns:
+            want = corpus_types.get(c)
+            have = delta.schema[c].dataType
+            if want is None or want == have:
+                continue
+            pair = (have.simpleString(), want.simpleString())
+            if pair in _LOSSLESS_UPCASTS:
+                delta = delta.withColumn(c, F.col(c).cast(want))
+            else:
+                retyped.append((c, want.simpleString(), have.simpleString()))
+        if retyped:
+            raise ValueError(
+                "upsert_corpus: shared column type change is not "
+                "supported — schema evolution widens the corpus, it never "
+                "retypes (untouched partitions' files hold the old "
+                "physical type): "
+                + ", ".join(
+                    f"{c}: corpus {old} vs delta {new}"
+                    for c, old, new in retyped
+                )
+                + " — cast the delta to the corpus type before upserting"
+            )
+        for c in partition_cols:
+            existing = existing.withColumn(
+                c, F.col(c).cast(delta.schema[c].dataType)
+            )
+        extra = [c for c in delta.columns if c not in set(existing.columns)]
+        narrow = [c for c in existing.columns if c not in set(delta.columns)]
+        if (extra or narrow) and not allow_schema_evolution:
+            raise ValueError(
+                "upsert_corpus: delta schema differs from the corpus "
+                f"(delta-only columns {extra}, corpus-only columns "
+                f"{narrow}) — pass allow_schema_evolution=True to widen "
+                "the corpus (new columns read back NULL for existing rows;"
+                " a delta missing an existing column REPLACES its keys'"
+                " values there with NULL)"
+            )
+        # checkpointed lazily: the count below is its first action and
+        # materializes it, so the staged write commits exactly the
+        # counted rows, decoupled from out_dir and from the delta's plan
+        merged = (
+            delta.withColumn("_pri", F.lit(0))
+            .unionByName(
+                existing.withColumn("_pri", F.lit(1)),
+                allowMissingColumns=allow_schema_evolution,
+            )
+            .withColumn(
+                "_rn",
+                F.row_number().over(
+                    Window.partitionBy(
+                        *[F.col(c) for c in key_cols]
+                    ).orderBy("_pri")
+                ),
+            )
+            .filter(F.col("_rn") == 1)
+            .drop("_pri", "_rn")
+        ).localCheckpoint(eager=False)
+        expected = {
+            _pkey(partition_cols, r): r["count"]
+            for r in merged.groupBy(*partition_cols).count().collect()
+        }
+        # record the (possibly widened) schema — the read authority for
+        # an evolved corpus, where untouched partitions' files
+        # physically lack the newest columns
+        schema = json.loads(merged.schema.json())
+        if prior is not None:  # incremental: merge touched counts in
+            commit = _content_commit(
+                out_dir, tok, prior, sorted(expected), schema
+            )
+        else:
+
+            def commit(back):  # recovery: rebuild from all committed files
+                manifest = _manifest_from_files(
+                    spark, out_dir, partition_cols,
+                    schema_hint=merged.schema,
+                )
+                manifest["schema"] = schema
+                check_lease(out_dir, tok)  # fence the manifest dump
+                return _dump_manifest(out_dir, manifest, tok)
+
+        return _rewrite_partitions(
+            "upsert_corpus", spark, out_dir, tok, merged, partition_cols,
+            sorted(expected), expected, commit, pred=pred,
+            max_records_per_file=max_records_per_file,
         )
 
 
@@ -1047,254 +1240,11 @@ def _recovered_schema(
     footer sweep is the correct price. Partition columns are recorded
     as STRING (their physically-known rendering; the typed originals
     died with the manifest)."""
-    from pyspark.sql import types as T
-
     base = spark.read.option("mergeSchema", "true").parquet(out_dir).schema
     return T.StructType(
         [f for f in base.fields if f.name not in partition_cols]
         + [T.StructField(c, T.StringType()) for c in partition_cols]
     )
-
-
-def _upsert_corpus_locked(
-    delta: DataFrame,
-    out_dir: str,
-    key_cols: tuple[str, ...],
-    partition_cols: tuple[str, ...],
-    max_records_per_file: int,
-    token: str,
-    allow_schema_evolution: bool = False,
-) -> dict:
-    """Body of :func:`upsert_corpus`; the maintenance lease is held."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    spark = delta.sparkSession
-    try:
-        with open(os.path.join(out_dir, MANIFEST)) as f:
-            prior = json.load(f)
-    except (FileNotFoundError, json.JSONDecodeError):
-        # missing/corrupt manifest (crash between data commit and
-        # manifest dump): proceed with the merge and REBUILD the
-        # manifest from a full read-back afterwards — the recovery
-        # path, where a full scan is the correct price
-        prior = None
-    # with no manifest the read-back cannot trust a single footer (the
-    # corpus may have evolved) — recover the union width from the files
-    hint = (
-        _recovered_schema(spark, out_dir, partition_cols)
-        if prior is None
-        else None
-    )
-    # ONE pass over the delta computes BOTH pre-merge facts (r14
-    # optimization round, guide §2.4 — it was two full delta scans:
-    # a distinct-partitions collect plus a separate duplicate-key
-    # probe; at 100 TB each is a complete pass over the delta):
-    # per-key counts carry the dup check, and the touched partition
-    # combos ride along as collected structs (bounded by the number
-    # of physical partitions, never by delta rows).
-    _psets = delta.groupBy(*[F.col(c) for c in key_cols]).agg(
-        F.count("*").alias("_c"),
-        F.collect_set(
-            F.struct(*[F.col(c) for c in partition_cols])
-        ).alias("_ps"),
-    )
-    # every aggregate below PARTIALLY aggregates (max / collect_set
-    # merge map-side), so the final reducer sees one bounded row per
-    # task — never one row per delta key
-    _summary = _psets.select(
-        F.col("_c"),
-        F.when(
-            F.col("_c") > 1, F.struct(*[F.col(c) for c in key_cols])
-        ).alias("_k"),
-        F.explode("_ps").alias("_p"),
-    ).agg(
-        F.max("_c").alias("_maxc"),
-        F.max("_k").alias("_dupkey"),
-        F.collect_set("_p").alias("_touched"),
-    ).collect()[0]
-    touched = [
-        tuple(t[c] for c in partition_cols) for t in _summary["_touched"]
-    ]
-    if not touched:  # empty delta: nothing to merge
-        if prior is not None:
-            return prior
-        manifest = _manifest_from_files(
-            spark, out_dir, partition_cols, schema_hint=hint
-        )
-        manifest["schema"] = json.loads(hint.json())
-        return _dump_manifest(out_dir, manifest, token)
-    # delta-wins needs ONE winner per key; two delta rows with the same
-    # key would tie on _pri and the survivor would be shuffle-order
-    # nondeterministic — refuse loudly instead of committing a coin flip
-    if _summary["_maxc"] is not None and _summary["_maxc"] > 1:
-        raise ValueError(
-            "upsert_corpus: delta contains duplicate key "
-            f"{tuple(_summary['_dupkey'])} — collapse the delta "
-            "to one row per key (e.g. latest revision) before upserting"
-        )
-    pred = _partition_pred(partition_cols, touched)
-    # string-schema read-back (string partition columns, matching the
-    # string-rendered pred above); cast back to the delta's declared
-    # types so unionByName merges type-identical frames
-    existing = _read_corpus(spark, out_dir, partition_cols, hint).filter(pred)
-    corpus_schema = existing.schema  # authority BEFORE the partition cast
-    # shared columns must KEEP the CORPUS's types, with or without the
-    # evolution flag (r13, ADVICE r12 #2 — the name-only extra/narrow
-    # check let a same-width delta with a retyped column slip through:
-    # unionByName silently coerces to the wider type, the coerced
-    # schema becomes the manifest authority, and untouched partitions'
-    # files — written with the old type — then fail or silently change
-    # type at scan under the new explicit read schema). Evolution
-    # WIDENS (adds columns); it never retypes. A delta column whose
-    # type upcasts LOSSLESSLY to the corpus type (int delta into a
-    # bigint corpus) is cast up here — the merge then carries exactly
-    # the corpus type and the authority never moves; anything else
-    # (corpus long vs delta double/string, any narrowing) raises.
-    # Data columns compare against the read authority (_read_corpus:
-    # hint / manifest / footer); partition columns — structurally
-    # STRING in the read-back — compare against the manifest-recorded
-    # typed schema.
-    from pyspark.sql import types as T
-
-    recorded = (
-        T.StructType.fromJson(prior["schema"])
-        if prior is not None and prior.get("schema") is not None
-        else None
-    )
-    corpus_types = {
-        f.name: f.dataType
-        for f in corpus_schema.fields
-        if f.name not in partition_cols
-    }
-    if recorded is not None:
-        corpus_types.update(
-            {c: recorded[c].dataType for c in partition_cols
-             if c in set(recorded.names)}
-        )
-    retyped = []
-    for c in delta.columns:
-        want = corpus_types.get(c)
-        have = delta.schema[c].dataType
-        if want is None or want == have:
-            continue
-        pair = (have.simpleString(), want.simpleString())
-        if pair in _LOSSLESS_UPCASTS:
-            delta = delta.withColumn(c, F.col(c).cast(want))
-        else:
-            retyped.append((c, want.simpleString(), have.simpleString()))
-    if retyped:
-        raise ValueError(
-            "upsert_corpus: shared column type change is not supported "
-            "— schema evolution widens the corpus, it never retypes "
-            "(untouched partitions' files hold the old physical type): "
-            + ", ".join(
-                f"{c}: corpus {old} vs delta {new}"
-                for c, old, new in retyped
-            )
-            + " — cast the delta to the corpus type before upserting"
-        )
-    for c in partition_cols:
-        existing = existing.withColumn(
-            c, F.col(c).cast(delta.schema[c].dataType)
-        )
-    extra = [c for c in delta.columns if c not in set(existing.columns)]
-    narrow = [c for c in existing.columns if c not in set(delta.columns)]
-    if (extra or narrow) and not allow_schema_evolution:
-        raise ValueError(
-            "upsert_corpus: delta schema differs from the corpus "
-            f"(delta-only columns {extra}, corpus-only columns {narrow})"
-            " — pass allow_schema_evolution=True to widen the corpus"
-            " (new columns read back NULL for existing rows; a delta"
-            " missing an existing column REPLACES its keys' values"
-            " there with NULL)"
-        )
-    merged = (
-        delta.withColumn("_pri", F.lit(0))
-        .unionByName(
-            existing.withColumn("_pri", F.lit(1)),
-            allowMissingColumns=allow_schema_evolution,
-        )
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy(*[F.col(c) for c in key_cols]).orderBy(
-                    "_pri"
-                )
-            ),
-        )
-        .filter(F.col("_rn") == 1)
-        .drop("_pri", "_rn")
-    ).localCheckpoint(eager=False)  # stable input, decoupled from out_dir
-    # LAZY checkpoint (r14 optimization round): the per-partition count
-    # below is merged's FIRST action, so it materializes the checkpoint
-    # inside the same job — one pass computes state and counts where
-    # eager paid a standalone materialization job first. Ordering is
-    # unchanged: the checkpoint is fully materialized before
-    # _staged_swap_write renames anything.
-    expected = {
-        _pkey(partition_cols, r): r["count"]
-        for r in merged.groupBy(*partition_cols).count().collect()
-    }
-    check_lease(out_dir, token)  # fence: abort if TTL-broken mid-merge
-    # staged commit (r10): the Spark write lands in a private staging
-    # dir, the fence re-checks, and only then do per-partition renames
-    # swap the result live — see _staged_swap_write. Cleanup deferred
-    # past the manifest dump (r14, snapshot reads): the displaced
-    # originals stay findable in trash until the new manifest commits,
-    # so a pinning reader holding the PRIOR manifest can still link
-    # that version's files throughout the swap->dump window.
-    leftovers = _staged_swap_write(
-        merged, out_dir, partition_cols, sorted(expected), token,
-        max_records_per_file, defer_cleanup=True,
-    )
-    check_lease(out_dir, token)  # post-swap fence (see corpus_lease)
-    back = _manifest_from_files(
-        spark, out_dir, partition_cols, pred=pred,
-        schema_hint=merged.schema,
-    )
-    if back["partitions"] != expected:
-        raise RuntimeError(
-            "upsert_corpus: post-write read-back does not match the "
-            f"pre-write plan (expected {expected}, found "
-            f"{back['partitions']}) — partial commit, manifest NOT "
-            "updated"
-        )
-    if prior is not None:  # incremental: merge touched counts in
-        parts = dict(prior["partitions"])
-        parts.update(back["partitions"])
-        # fingerprints merge the same way: untouched partitions carry
-        # their recorded pair verbatim (valid across widening — see
-        # _row_fingerprint_col), touched ones are recomputed from the
-        # read-back; a legacy (pre-r13) manifest contributes none, so
-        # the map may be partial — consumers treat absence as unknown
-        fps = dict(prior.get("fingerprints", {}))
-        fps.update(back["fingerprints"])
-        # file lists merge identically (r14, snapshot reads): untouched
-        # partitions' files are untouched by construction
-        files = dict(prior.get("files", {}))
-        files.update(back["files"])
-        manifest = {
-            "partition_cols": list(partition_cols),
-            "partitions": parts,
-            "fingerprints": fps,
-            "files": files,
-            "total_rows": sum(parts.values()),
-        }
-    else:  # recovery: rebuild from all committed files
-        manifest = _manifest_from_files(
-            spark, out_dir, partition_cols, schema_hint=merged.schema
-        )
-    # record the (possibly widened) schema — the read authority for an
-    # evolved corpus, where untouched partitions' files physically lack
-    # the newest columns (r12)
-    manifest["schema"] = json.loads(merged.schema.json())
-    check_lease(out_dir, token)  # fence the manifest dump as well
-    manifest = _dump_manifest(out_dir, manifest, token)  # commit point
-    import shutil as _shutil
-
-    _finish_swap_cleanup(out_dir, leftovers)
-    return manifest
 
 
 def _staged_swap_write(
@@ -1305,8 +1255,7 @@ def _staged_swap_write(
     token: str,
     max_records_per_file: int,
     may_vanish: frozenset[str] = frozenset(),
-    defer_cleanup: bool = False,
-) -> tuple[str, str] | None:
+) -> tuple[str, str]:
     """Token-checked staged commit for the read-modify-write writers
     (r10, the real fix for the r09 review's fence-then-write finding):
     write ``merged`` to a private underscore-prefixed staging dir
@@ -1337,9 +1286,10 @@ def _staged_swap_write(
     partitions the writer intended to touch), and the trash dir is
     created — empty — the moment the swap begins (so recovery can
     distinguish crash-during-write, where nothing live was touched,
-    from crash-mid-swap)."""
-    import shutil
+    from crash-mid-swap).
 
+    Returns ``(staging, trash)``: disposing of them is the caller's
+    last step, after its manifest commit (:func:`_rewrite_partitions`)."""
     staging = os.path.join(out_dir, f"_staging_{token}")
     trash = os.path.join(out_dir, f"_trash_{token}")
     swapping = False
@@ -1392,21 +1342,122 @@ def _staged_swap_write(
         # mid-swap failure: LEAVE staging + trash in place — the
         # replaced originals live under the trash dir for recovery
         raise
-    if defer_cleanup:
-        # r12 review: a writer that REMOVES partitions (delete's
-        # may_vanish) must keep the displaced originals until its
-        # manifest dump COMMITS the removal — dropping trash first
-        # opens a crash window where the data is gone but the manifest
-        # still lists it, which recovery could neither roll back (no
-        # trash) nor reconcile. The caller dumps the manifest (stamped
-        # with this token, see _dump_manifest) and then removes both
-        # dirs; recover_corpus rolls leftovers FORWARD when the
-        # committed manifest carries the same token.
-        return staging, trash
-    # success: dispose of the replaced originals (retire under
-    # retention, destroy otherwise) and the staging leftovers
-    _finish_swap_cleanup(out_dir, (staging, trash))
-    return None
+    # cleanup is the caller's, AFTER its manifest commit: a writer that
+    # removes partitions (delete's may_vanish) must keep the displaced
+    # originals until the manifest commits the removal, and a pinning
+    # reader holding the PRIOR manifest must find that version's files
+    # in trash throughout the swap->commit window. recover_corpus rolls
+    # leftovers FORWARD when the committed manifest carries the token.
+    return staging, trash
+
+
+def _rewrite_partitions(
+    op: str,
+    spark: SparkSession,
+    out_dir: str,
+    token: str,
+    frame: DataFrame,
+    partition_cols: tuple[str, ...],
+    pkeys: list[str],
+    expected: dict,
+    commit,
+    *,
+    pred=None,
+    may_vanish: frozenset[str] = frozenset(),
+    max_records_per_file: int,
+):
+    """THE rewrite transaction every partition-rewriting writer commits
+    through (the lease ``token`` is held by the caller): pre-write
+    fence, :func:`_staged_swap_write` of ``frame`` over ``pkeys``,
+    post-swap fence, the read-back of the committed files (pruned to
+    ``pred`` when given), the check that its per-partition counts equal
+    the caller's ``expected`` plan (a partial commit raises with the
+    manifest NOT updated), ``commit(back)`` — the manifest commit point,
+    see :func:`_layout_commit` / :func:`_content_commit` — and finally
+    disposal of the swap's staging and displaced originals. Returns
+    whatever ``commit`` returns.
+
+    ``frame`` may be LAZY over the very partitions it replaces: the
+    Spark write lands in a private staging dir and the source partition
+    dirs are untouched until the post-job renames, so the write job (and
+    any task retry) re-reads stable committed files. An eager
+    corpus-sized ``localCheckpoint`` bought no safety and roughly
+    doubled a full rewrite's I/O (SCALING_DECADE2.md)."""
+    check_lease(out_dir, token)  # fence: abort if TTL-broken mid-plan
+    leftovers = _staged_swap_write(
+        frame, out_dir, partition_cols, pkeys, token, max_records_per_file,
+        may_vanish=may_vanish,
+    )
+    check_lease(out_dir, token)  # post-swap fence (see corpus_lease)
+    back = _manifest_from_files(
+        spark, out_dir, partition_cols, pred=pred, schema_hint=frame.schema
+    )
+    if back["partitions"] != expected:
+        raise RuntimeError(
+            f"{op}: post-write read-back does not match the pre-write "
+            f"plan (expected {expected}, found {back['partitions']}) — "
+            "partial commit, manifest NOT updated"
+        )
+    manifest = commit(back)
+    _finish_swap_cleanup(out_dir, leftovers)
+    return manifest
+
+
+def _layout_commit(op: str, out_dir: str, token: str, prior: dict, pkeys):
+    """Commit for the layout-only rewriters (compaction, layout
+    clustering): the rewritten partitions' content fingerprints must
+    equal the manifest's, then only the file lists are refreshed
+    (:func:`_rewrite_manifest_files`) — no token enters
+    ``committed_tokens``, because content did not change."""
+
+    def commit(back: dict) -> dict:
+        _check_content_preserved(op, prior, back, pkeys)
+        check_lease(out_dir, token)  # fence the manifest rewrite as well
+        return _rewrite_manifest_files(out_dir, pkeys)
+
+    return commit
+
+
+def _content_commit(
+    out_dir: str, token: str, prior: dict, pkeys, schema: dict | None
+):
+    """Commit for the content-changing writers (upsert, delete, redact):
+    every touched partition takes the read-back's count, fingerprint
+    and file list, or leaves the manifest when the read-back no longer
+    has it (a partition whose every row was deleted); untouched
+    partitions carry their recorded entries verbatim (fingerprints stay
+    valid across widening — see :func:`_row_fingerprint_col`; a legacy
+    manifest may carry none, and consumers treat absence as unknown).
+    ``schema`` is the data schema to record (None keeps the field out).
+    The dump, stamped with ``token``, is the commit point."""
+
+    def commit(back: dict) -> dict:
+        parts = dict(prior["partitions"])
+        fps = dict(prior.get("fingerprints", {}))
+        files = dict(prior.get("files", {}))
+        for k in pkeys:
+            for have, got in (
+                (parts, back["partitions"]),
+                (fps, back["fingerprints"]),
+                (files, back["files"]),
+            ):
+                if k in got:
+                    have[k] = got[k]
+                else:
+                    have.pop(k, None)
+        manifest = {
+            "partition_cols": list(prior["partition_cols"]),
+            "partitions": parts,
+            "fingerprints": fps,
+            "files": files,
+            "total_rows": sum(parts.values()),
+        }
+        if schema is not None:
+            manifest["schema"] = schema
+        check_lease(out_dir, token)  # fence the manifest dump as well
+        return _dump_manifest(out_dir, manifest, token)  # commit point
+
+    return commit
 
 
 def recover_corpus(out_dir: str, spark: SparkSession | None = None) -> dict:
@@ -1481,8 +1532,6 @@ def _recover_corpus_locked(
     recover lease and acquiring the vacuum one, during which a takedown
     could start and crash, leaving residue the just-returned vacuum
     report would not mention."""
-    import shutil
-
     report: dict = {
         "discarded_staging": [], "rolled_back": [], "rolled_forward": [],
         "restored": [], "removed_new": [],
@@ -1555,8 +1604,8 @@ def _recover_corpus_locked(
             # it BACK, resurrecting taken-down partitions): its
             # dump — the commit point — already happened, so these
             # leftovers are post-commit residue of a
-            # deferred-cleanup writer (delete/redact keep their
-            # trash until the manifest commits). Roll FORWARD:
+            # writer (every writer keeps its trash until its
+            # manifest commits). Roll FORWARD:
             # complete the committed op's deferred cleanup exactly
             # as the writer would have (retire the displaced
             # originals under retention, destroy otherwise);
@@ -1676,8 +1725,6 @@ def vacuum_corpus(
     ``keep_versions`` horizon (:func:`expire_corpus_versions`, run as
     phase 3 under the same single lease). Returns the recovery report
     plus ``{"swept_files": [names], "versions": expiry report}``."""
-    import shutil as _shutil
-
     swept: list[str] = []
     with corpus_lease(out_dir, "vacuum", ttl_sec=ttl_sec):
         report = _recover_corpus_locked(out_dir, spark)
@@ -1695,7 +1742,7 @@ def vacuum_corpus(
                 # pin is younger by construction; pins are transient)
                 with contextlib.suppress(OSError):
                     if now - os.path.getmtime(path) > ttl_sec:
-                        _shutil.rmtree(path, ignore_errors=True)
+                        shutil.rmtree(path, ignore_errors=True)
                         swept.append(name)
                 continue
             if not (
@@ -1729,7 +1776,6 @@ def _parse_pkey(partition_cols: tuple[str, ...], pkey: str) -> tuple:
 def compact_corpus(
     spark: SparkSession,
     out_dir: str,
-    partition_cols: tuple[str, ...] = ("source",),
     target_rows_per_file: int = 100_000,
 ) -> dict:
     """Small-file compaction — the corpus MAINTENANCE operator a living
@@ -1745,91 +1791,46 @@ def compact_corpus(
     listing (no data scan); the rewrite reads a partition-PRUNED scan of
     just the fragmented partitions, repartitions by the partition
     columns (one task -> one file per partition, with
-    ``maxRecordsPerFile`` re-splitting past the target), and commits via
-    the staged token-checked swap — the same idempotent, localCheckpoint-
-    decoupled write discipline as :func:`upsert_corpus`. Content is
-    preserved exactly: the post-write pruned read-back counts are
-    CHECKED against the manifest (which does not change) and a mismatch
-    raises instead of blessing a partial commit.
+    ``maxRecordsPerFile`` re-splitting past the target), and commits
+    through :func:`_rewrite_partitions`. Content is preserved exactly:
+    the post-write pruned read-back counts AND fingerprints are checked
+    against the manifest (which does not change) and a mismatch raises
+    instead of blessing a partial commit.
 
     Concurrency contract (r09): serializes on the per-corpus maintenance
     lease (:func:`corpus_lease`) — a compaction running concurrently
     with an upsert on the same corpus would commit its pre-upsert
-    ``localCheckpoint`` snapshot over the upsert's partitions (the
-    lost-update pinned by tests/test_corpus_io.py); with the lease the
-    second writer raises :class:`MaintenanceLeaseHeld` instead.
+    snapshot over the upsert's partitions (the lost-update pinned by
+    tests/test_corpus_io.py); with the lease the second writer raises
+    :class:`MaintenanceLeaseHeld` instead.
     """
     with corpus_lease(out_dir, "compact") as tok:
-        return _compact_corpus_locked(
-            spark, out_dir, partition_cols, target_rows_per_file, tok
+        with open(os.path.join(out_dir, MANIFEST)) as f:
+            manifest = json.load(f)
+        partition_cols = tuple(manifest["partition_cols"])
+        plan = []
+        for pkey, rows in manifest["partitions"].items():
+            pdir = os.path.join(out_dir, pkey)
+            nf = len(glob.glob(os.path.join(pdir, "*.parquet")))
+            if nf > max(1, -(-rows // target_rows_per_file)):
+                plan.append(pkey)
+        if not plan:
+            return {"compacted": [], "manifest": manifest}
+        # _parse_pkey values are already the directory-rendered strings,
+        # so they compare directly against the string-schema read-back
+        pred = _partition_pred(
+            partition_cols, [_parse_pkey(partition_cols, k) for k in plan]
         )
-
-
-def _compact_corpus_locked(
-    spark: SparkSession,
-    out_dir: str,
-    partition_cols: tuple[str, ...],
-    target_rows_per_file: int,
-    token: str,
-) -> dict:
-    """Body of :func:`compact_corpus`; the maintenance lease is held."""
-    import glob as _glob
-
-    from pyspark.sql import functions as F
-
-    with open(os.path.join(out_dir, MANIFEST)) as f:
-        manifest = json.load(f)
-    plan = []
-    for pkey, rows in manifest["partitions"].items():
-        pdir = os.path.join(out_dir, pkey)
-        nf = len(_glob.glob(os.path.join(pdir, "*.parquet")))
-        need = max(1, -(-rows // target_rows_per_file))
-        if nf > need:
-            plan.append(pkey)
-    if not plan:
-        return {"compacted": [], "manifest": manifest}
-    # _parse_pkey values are already the directory-rendered strings, so
-    # they compare directly against the string-schema read-back
-    pred = _partition_pred(
-        partition_cols, [_parse_pkey(partition_cols, k) for k in plan]
-    )
-    # LAZY input (r14 optimization round, extending VERDICT r13 #2's
-    # layout/redact treatment to compaction): the staged write lands in
-    # a private staging dir and the source partition dirs are untouched
-    # until the post-job renames, so the write job (and any task retry)
-    # re-reads stable committed files; ``merged`` is consumed by exactly
-    # ONE job, so the eager checkpoint materialized the fragmented
-    # partitions to executor-local storage just to read them straight
-    # back — a pure extra pass.
-    merged = _read_corpus(spark, out_dir, partition_cols).filter(pred)
-    if EAGER_REWRITE_CHECKPOINT:  # r13-compat arm for the decade A/B
-        merged = merged.localCheckpoint(eager=True)
-    check_lease(out_dir, token)  # fence: abort if TTL-broken mid-snapshot
-    # cleanup deferred past the file-list rewrite (r14, snapshot reads):
-    # the displaced originals stay findable in trash until the manifest
-    # names the new files, so a pinning reader racing this rewrite can
-    # always link the manifest's version — live or trash
-    leftovers = _staged_swap_write(
-        merged.repartition(*[F.col(c) for c in partition_cols]),
-        out_dir, partition_cols, plan, token, target_rows_per_file,
-        defer_cleanup=True,
-    )
-    check_lease(out_dir, token)  # post-swap fence (see corpus_lease)
-    back = _manifest_from_files(spark, out_dir, partition_cols, pred=pred)
-    expected = {k: manifest["partitions"][k] for k in plan}
-    if back["partitions"] != expected:
-        raise RuntimeError(
-            "compact_corpus: post-write read-back does not match the "
-            f"manifest (expected {expected}, found {back['partitions']})"
-            " — partial commit"
+        frame = _read_corpus(spark, out_dir, partition_cols).filter(pred)
+        manifest = _rewrite_partitions(
+            "compact_corpus", spark, out_dir, tok,
+            frame.repartition(*[F.col(c) for c in partition_cols]),
+            partition_cols, plan,
+            {k: manifest["partitions"][k] for k in plan},
+            _layout_commit("compact_corpus", out_dir, tok, manifest, plan),
+            pred=pred, max_records_per_file=target_rows_per_file,
         )
-    _check_content_preserved("compact_corpus", manifest, back, plan)
-    check_lease(out_dir, token)
-    manifest = _rewrite_manifest_files(out_dir, plan)
-    import shutil as _shutil
-
-    _finish_swap_cleanup(out_dir, leftovers)
-    return {"compacted": plan, "manifest": manifest}
+        return {"compacted": plan, "manifest": manifest}
 
 
 def _check_content_preserved(
@@ -1859,7 +1860,6 @@ def cluster_corpus_layout(
     spark: SparkSession,
     out_dir: str,
     cluster_col: str = "doc_id",
-    partition_cols: tuple[str, ...] = ("source",),
     target_rows_per_file: int = 100_000,
 ) -> dict:
     """Range-cluster the corpus files on ``cluster_col`` — the data-
@@ -1873,96 +1873,41 @@ def cluster_corpus_layout(
     row groups — and a format with file-level stats pruning skips the
     files — that a range predicate cannot match.
 
-    Content-preserving like :func:`compact_corpus`: staged-swap
-    commit, post-write counts checked against the (unchanged) manifest;
-    a mismatch raises. Cost: one range-sampling pass + one full read +
-    range-shuffle + write of the corpus — the classic offline OPTIMIZE
-    job, run at much lower frequency than compaction. The input is
-    LAZY (r14, VERDICT r13 #2): the staged swap already decouples the
-    read from the path being rewritten (the Spark job lands in a
-    private staging dir; source files are untouched until the post-job
-    renames), so the r10-era eager ``localCheckpoint`` — a corpus-sized
-    copy to executor-local disk that roughly doubled the rewrite's I/O
-    — was no longer buying any safety and is gone; the x1000-decade
-    A/B is in SCALING_DECADE2.md.
+    Content-preserving like :func:`compact_corpus`: committed through
+    :func:`_rewrite_partitions`, post-write counts and fingerprints
+    checked against the (unchanged) manifest; a mismatch raises. Cost:
+    one range-sampling pass + one full read + range-shuffle + write of
+    the corpus — the classic offline OPTIMIZE job, run at much lower
+    frequency than compaction.
 
     Concurrency contract (r09): serializes on the per-corpus maintenance
     lease (:func:`corpus_lease`), exactly like :func:`compact_corpus` —
     a full-corpus snapshot-rewrite is the widest possible lost-update
     window against a concurrent upsert."""
     with corpus_lease(out_dir, "layout") as tok:
-        return _cluster_corpus_layout_locked(
-            spark, out_dir, cluster_col, partition_cols,
-            target_rows_per_file, tok,
+        with open(os.path.join(out_dir, MANIFEST)) as f:
+            manifest = json.load(f)
+        partition_cols = tuple(manifest["partition_cols"])
+        n = max(1, -(-manifest["total_rows"] // target_rows_per_file))
+        cols = [F.col(c) for c in partition_cols] + [F.col(cluster_col)]
+        pkeys = sorted(manifest["partitions"])
+        manifest = _rewrite_partitions(
+            "cluster_corpus_layout", spark, out_dir, tok,
+            _read_corpus(spark, out_dir, partition_cols)
+            .repartitionByRange(n, *cols).sortWithinPartitions(*cols),
+            partition_cols, pkeys, manifest["partitions"],
+            _layout_commit(
+                "cluster_corpus_layout", out_dir, tok, manifest, pkeys
+            ),
+            max_records_per_file=target_rows_per_file,
         )
-
-
-def _cluster_corpus_layout_locked(
-    spark: SparkSession,
-    out_dir: str,
-    cluster_col: str,
-    partition_cols: tuple[str, ...],
-    target_rows_per_file: int,
-    token: str,
-) -> dict:
-    """Body of :func:`cluster_corpus_layout`; the lease is held."""
-    from pyspark.sql import functions as F
-
-    with open(os.path.join(out_dir, MANIFEST)) as f:
-        manifest = json.load(f)
-    total = manifest["total_rows"]
-    n = max(1, -(-total // target_rows_per_file))
-    # LAZY input (r14, VERDICT r13 #2): the r10-era eager
-    # localCheckpoint here predated the staged swap and materialized
-    # the ENTIRE corpus to executor-local disk before the rewrite — a
-    # corpus-sized extra write that roughly doubled the job's I/O at
-    # scale. It is no longer load-bearing: the staged write lands in a
-    # private staging dir and the source partition dirs are untouched
-    # until the post-job renames, so every task (and any task retry)
-    # re-reads stable committed files; ``merged`` is consumed by
-    # exactly one job (repartitionByRange's sampling pass plus the
-    # write — two scans of the source parquet, still cheaper than
-    # checkpoint write + two checkpoint reads). A/B at the x1000
-    # decade: SCALING_DECADE2.md (r14).
-    merged = _read_corpus(spark, out_dir, partition_cols)
-    if EAGER_REWRITE_CHECKPOINT:  # r13-compat arm for the decade A/B
-        merged = merged.localCheckpoint(eager=True)
-    check_lease(out_dir, token)  # fence: abort if TTL-broken mid-plan
-    cols = [F.col(c) for c in partition_cols] + [F.col(cluster_col)]
-    # cleanup deferred past the file-list rewrite (r14) — see
-    # _compact_corpus_locked for the pinning-reader rationale
-    leftovers = _staged_swap_write(
-        merged.repartitionByRange(n, *cols).sortWithinPartitions(*cols),
-        out_dir, partition_cols, sorted(manifest["partitions"]), token,
-        target_rows_per_file, defer_cleanup=True,
-    )
-    check_lease(out_dir, token)  # post-swap fence (see corpus_lease)
-    back = _manifest_from_files(spark, out_dir, partition_cols)
-    if back["partitions"] != manifest["partitions"]:
-        raise RuntimeError(
-            "cluster_corpus_layout: post-write read-back does not match "
-            f"the manifest (expected {manifest['partitions']}, found "
-            f"{back['partitions']}) — partial commit"
-        )
-    _check_content_preserved(
-        "cluster_corpus_layout", manifest, back,
-        sorted(manifest["partitions"]),
-    )
-    check_lease(out_dir, token)
-    manifest = _rewrite_manifest_files(
-        out_dir, sorted(manifest["partitions"])
-    )
-    import shutil as _shutil
-
-    _finish_swap_cleanup(out_dir, leftovers)
-    return {"range_tasks": n, "manifest": manifest}
+        return {"range_tasks": n, "manifest": manifest}
 
 
 def delete_from_corpus(
     spark: SparkSession,
     out_dir: str,
     condition,
-    partition_cols: tuple[str, ...] = ("source",),
     max_records_per_file: int = 100_000,
 ) -> dict:
     """Predicate delete — the takedown operator a living training
@@ -1977,130 +1922,72 @@ def delete_from_corpus(
     Scale shape: one partition-pruned-free pass computes per-partition
     match counts (one bounded row per matching partition to the
     driver); survivors are then read back PARTITION-PRUNED to just the
-    matching partitions, and the staged token-checked swap replaces
-    only those — a partition whose every row matched is REMOVED
-    (displaced into trash with no staged replacement, which crash
-    recovery rolls back like any displaced original; the manifest dump
-    after the swap is the commit point, exactly like upsert). Cost is
-    O(matching partitions), never a corpus rewrite; the initial match
-    scan is one full read, the price of an arbitrary predicate —
-    callers with partition-column predicates get that scan pruned by
-    Spark automatically.
+    matching partitions, and :func:`_rewrite_partitions` replaces only
+    those — a partition whose every row matched is REMOVED (displaced
+    into trash with no staged replacement, which crash recovery rolls
+    back like any displaced original; the manifest dump after the swap
+    is the commit point, exactly like upsert). Cost is O(matching
+    partitions), never a corpus rewrite; the initial match scan is one
+    full read, the price of an arbitrary predicate — callers with
+    partition-column predicates get that scan pruned by Spark
+    automatically.
 
     Serializes on the per-corpus maintenance lease like every writer.
     Returns ``{"deleted_rows", "removed_partitions", "manifest"}``."""
-    with corpus_lease(out_dir, "delete") as tok:
-        return _delete_from_corpus_locked(
-            spark, out_dir, condition, partition_cols,
-            max_records_per_file, tok,
-        )
-
-
-def _delete_from_corpus_locked(
-    spark: SparkSession,
-    out_dir: str,
-    condition,
-    partition_cols: tuple[str, ...],
-    max_records_per_file: int,
-    token: str,
-) -> dict:
-    """Body of :func:`delete_from_corpus`; the lease is held."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
     cond = F.expr(condition) if isinstance(condition, str) else condition
-    with open(os.path.join(out_dir, MANIFEST)) as f:
-        prior = json.load(f)
+    with corpus_lease(out_dir, "delete") as tok:
+        with open(os.path.join(out_dir, MANIFEST)) as f:
+            prior = json.load(f)
+        partition_cols = tuple(prior["partition_cols"])
 
-    def _typed(df):
-        if prior.get("schema") is not None:
-            sch = T.StructType.fromJson(prior["schema"])
-            for c in partition_cols:
-                df = df.withColumn(c, F.col(c).cast(sch[c].dataType))
-        return df
+        def _typed(df):
+            if prior.get("schema") is not None:
+                sch = T.StructType.fromJson(prior["schema"])
+                for c in partition_cols:
+                    df = df.withColumn(c, F.col(c).cast(sch[c].dataType))
+            return df
 
-    raw = _read_corpus(spark, out_dir, partition_cols)
-    hits = (
-        _typed(raw).filter(cond)
-        .groupBy(*partition_cols).count().collect()
-    )  # bounded: one row per matching partition
-    if not hits:
-        return {
-            "deleted_rows": 0, "removed_partitions": [],
-            "manifest": prior,
-        }
-    touched_vals = [tuple(r[c] for c in partition_cols) for r in hits]
-    del_counts = {_pkey(partition_cols, r): int(r["count"]) for r in hits}
-    pred = _partition_pred(partition_cols, touched_vals)
-    # survivors: the pruned scan of just the matching partitions, minus
-    # the TRUE-condition rows (NULL-condition rows survive, see above)
-    merged = (
-        _typed(raw.filter(pred))
-        .filter(~F.coalesce(cond, F.lit(False)))
-        .localCheckpoint(eager=False)
-    )
-    # LAZY checkpoint: the survivor count below is merged's first
-    # action and materializes it in the same job (see upsert)
-    expected = {
-        _pkey(partition_cols, r): r["count"]
-        for r in merged.groupBy(*partition_cols).count().collect()
-    }
-    removed = sorted(k for k in del_counts if k not in expected)
-    check_lease(out_dir, token)  # fence: abort if TTL-broken mid-plan
-    # cleanup DEFERRED past the manifest dump (r12 review): the
-    # displaced originals must survive until the removal is committed,
-    # or a crash in between strands a manifest that lists partitions
-    # no longer on disk (see _staged_swap_write / recover_corpus)
-    leftovers = _staged_swap_write(
-        merged, out_dir, partition_cols, sorted(del_counts), token,
-        max_records_per_file, may_vanish=frozenset(removed),
-        defer_cleanup=True,
-    )
-    check_lease(out_dir, token)  # post-swap fence
-    back = _manifest_from_files(
-        spark, out_dir, partition_cols, pred=pred,
-        schema_hint=merged.schema,
-    )
-    if back["partitions"] != expected:
-        raise RuntimeError(
-            "delete_from_corpus: post-write read-back does not match "
-            f"the survivor plan (expected {expected}, found "
-            f"{back['partitions']}) — partial commit, manifest NOT "
-            "updated"
+        raw = _read_corpus(spark, out_dir, partition_cols)
+        hits = (
+            _typed(raw).filter(cond)
+            .groupBy(*partition_cols).count().collect()
+        )  # bounded: one row per matching partition
+        if not hits:
+            return {
+                "deleted_rows": 0, "removed_partitions": [],
+                "manifest": prior,
+            }
+        del_counts = {_pkey(partition_cols, r): int(r["count"]) for r in hits}
+        pred = _partition_pred(
+            partition_cols, [tuple(r[c] for c in partition_cols) for r in hits]
         )
-    parts = dict(prior["partitions"])
-    fps = dict(prior.get("fingerprints", {}))
-    files = dict(prior.get("files", {}))
-    for k, n_del in del_counts.items():
-        if k in expected:
-            parts[k] = expected[k]
-            if k in back["fingerprints"]:
-                fps[k] = back["fingerprints"][k]
-            if k in back["files"]:
-                files[k] = back["files"][k]
-        else:
-            parts.pop(k, None)
-            fps.pop(k, None)
-            files.pop(k, None)
-    manifest = {
-        "partition_cols": list(partition_cols),
-        "partitions": parts,
-        "fingerprints": fps,
-        "files": files,
-        "total_rows": sum(parts.values()),
-    }
-    if prior.get("schema") is not None:  # deletes never change schema
-        manifest["schema"] = prior["schema"]
-    check_lease(out_dir, token)  # fence the manifest dump as well
-    manifest = _dump_manifest(out_dir, manifest, token)  # commit point
-    import shutil as _shutil
-
-    _finish_swap_cleanup(out_dir, leftovers)
-    return {
-        "deleted_rows": sum(del_counts.values()),
-        "removed_partitions": removed,
-        "manifest": manifest,
-    }
+        # survivors: the pruned scan of just the matching partitions,
+        # minus the TRUE-condition rows (NULL-condition rows survive);
+        # checkpointed lazily like upsert's merge
+        merged = (
+            _typed(raw.filter(pred))
+            .filter(~F.coalesce(cond, F.lit(False)))
+            .localCheckpoint(eager=False)
+        )
+        expected = {
+            _pkey(partition_cols, r): r["count"]
+            for r in merged.groupBy(*partition_cols).count().collect()
+        }
+        removed = sorted(k for k in del_counts if k not in expected)
+        pkeys = sorted(del_counts)
+        manifest = _rewrite_partitions(
+            "delete_from_corpus", spark, out_dir, tok, merged,
+            partition_cols, pkeys, expected,
+            # deletes never change the schema
+            _content_commit(out_dir, tok, prior, pkeys, prior.get("schema")),
+            pred=pred, may_vanish=frozenset(removed),
+            max_records_per_file=max_records_per_file,
+        )
+        return {
+            "deleted_rows": sum(del_counts.values()),
+            "removed_partitions": removed,
+            "manifest": manifest,
+        }
 
 
 def redact_column_from_corpus(
@@ -2113,11 +2000,11 @@ def redact_column_from_corpus(
     compliance shape after row deletes and schema widening: purge a
     COLUMN corpus-wide (a PII field that should never have been
     collected, a licensing pull on one modality). Every partition is
-    rewritten WITHOUT ``column`` through the same lease + staged
-    token-checked swap as every writer, and the manifest schema is
-    NARROWED — the first narrowing evolution (widening adds columns
-    with scan-time null fill; narrowing must physically rewrite,
-    because the bytes being removed are the point).
+    rewritten WITHOUT ``column`` through the same lease and
+    :func:`_rewrite_partitions` transaction as every writer, and the
+    manifest schema is NARROWED — the first narrowing evolution
+    (widening adds columns with scan-time null fill; narrowing must
+    physically rewrite, because the bytes being removed are the point).
 
     Scale shape: one full read + write of the corpus — the honest
     price of physically destroying a column's bytes (column pruning
@@ -2126,95 +2013,49 @@ def redact_column_from_corpus(
     dirs swap one at a time; a crash mid-swap rolls back via
     :func:`recover_corpus` (manifest/schema unchanged until the dump,
     so rollback restores a consistent pre-redact corpus and the
-    redact is re-run). Cleanup is DEFERRED past the manifest dump
-    exactly like :func:`delete_from_corpus`: the displaced originals
-    — which still HOLD the redacted bytes — stay in trash until the
-    narrowed manifest commits, then are dropped; a crash in between
-    is post-commit residue the durable commit log rolls forward.
-    Run :func:`vacuum_corpus` afterwards to certify no residue bytes
+    redact is re-run). The displaced originals — which still HOLD the
+    redacted bytes — stay in trash until the narrowed manifest
+    commits, then are dropped; a crash in between is post-commit
+    residue the durable commit log rolls forward. Run
+    :func:`vacuum_corpus` afterwards to certify no residue bytes
     survive.
 
     Refuses to redact a partition column (it is the layout) — drop it
     by rewriting the corpus with different ``partition_cols`` instead.
     Returns ``{"redacted_column", "manifest"}``."""
     with corpus_lease(out_dir, "redact") as tok:
-        return _redact_column_locked(
-            spark, out_dir, column, max_records_per_file, tok
+        with open(os.path.join(out_dir, MANIFEST)) as f:
+            prior = json.load(f)
+        partition_cols = tuple(prior["partition_cols"])
+        if column in partition_cols:
+            raise ValueError(
+                f"redact_column_from_corpus: {column!r} is a partition "
+                "column — the corpus layout, not data; rewrite the "
+                "corpus with different partition_cols instead"
+            )
+        back = _read_corpus(spark, out_dir, partition_cols)
+        if column not in back.columns:
+            raise ValueError(
+                f"redact_column_from_corpus: corpus has no column "
+                f"{column!r} (columns: {sorted(back.columns)})"
+            )
+        schema = prior.get("schema")
+        if schema is not None:  # narrow the schema authority
+            schema = {
+                **schema,
+                "fields": [
+                    fld for fld in schema["fields"] if fld["name"] != column
+                ],
+            }
+        pkeys = sorted(prior["partitions"])
+        manifest = _rewrite_partitions(
+            "redact_column_from_corpus", spark, out_dir, tok,
+            back.drop(column),  # column pruning: never reads the column
+            partition_cols, pkeys, prior["partitions"],
+            _content_commit(out_dir, tok, prior, pkeys, schema),
+            max_records_per_file=max_records_per_file,
         )
-
-
-def _redact_column_locked(
-    spark: SparkSession,
-    out_dir: str,
-    column: str,
-    max_records_per_file: int,
-    token: str,
-) -> dict:
-    """Body of :func:`redact_column_from_corpus`; the lease is held."""
-    import shutil as _shutil
-
-    with open(os.path.join(out_dir, MANIFEST)) as f:
-        prior = json.load(f)
-    partition_cols = tuple(prior["partition_cols"])
-    if column in partition_cols:
-        raise ValueError(
-            f"redact_column_from_corpus: {column!r} is a partition "
-            "column — the corpus layout, not data; rewrite the corpus "
-            "with different partition_cols instead"
-        )
-    back = _read_corpus(spark, out_dir, partition_cols)
-    if column not in back.columns:
-        raise ValueError(
-            f"redact_column_from_corpus: corpus has no column "
-            f"{column!r} (columns: {sorted(back.columns)})"
-        )
-    # column pruning: the rewrite plan never reads the doomed column.
-    # LAZY input (r14, VERDICT r13 #2): no eager localCheckpoint — the
-    # staged write reads the stable committed files (untouched until
-    # the post-job renames) in its one and only consuming job, so the
-    # corpus-sized executor-local snapshot the checkpoint paid for
-    # bought nothing; see _cluster_corpus_layout_locked for the A/B.
-    merged = back.drop(column)
-    if EAGER_REWRITE_CHECKPOINT:  # r13-compat arm for the decade A/B
-        merged = merged.localCheckpoint(eager=True)
-    pkeys = sorted(prior["partitions"])
-    check_lease(out_dir, token)  # fence: abort if TTL-broken mid-read
-    leftovers = _staged_swap_write(
-        merged, out_dir, partition_cols, pkeys, token,
-        max_records_per_file, defer_cleanup=True,
-    )
-    check_lease(out_dir, token)  # post-swap fence
-    fresh = _manifest_from_files(
-        spark, out_dir, partition_cols, schema_hint=merged.schema
-    )
-    if fresh["partitions"] != prior["partitions"]:
-        raise RuntimeError(
-            "redact_column_from_corpus: post-write read-back does not "
-            f"match the manifest (expected {prior['partitions']}, "
-            f"found {fresh['partitions']}) — partial commit, manifest "
-            "NOT updated"
-        )
-    manifest = {
-        "partition_cols": list(partition_cols),
-        "partitions": dict(prior["partitions"]),
-        # every partition was rewritten without the column: every
-        # fingerprint is recomputed (the content DID change)
-        "fingerprints": fresh["fingerprints"],
-        "files": fresh["files"],
-        "total_rows": prior["total_rows"],
-    }
-    if prior.get("schema") is not None:  # narrow the schema authority
-        manifest["schema"] = {
-            **prior["schema"],
-            "fields": [
-                fld for fld in prior["schema"]["fields"]
-                if fld["name"] != column
-            ],
-        }
-    check_lease(out_dir, token)  # fence the manifest dump as well
-    manifest = _dump_manifest(out_dir, manifest, token)  # commit point
-    _finish_swap_cleanup(out_dir, leftovers)
-    return {"redacted_column": column, "manifest": manifest}
+        return {"redacted_column": column, "manifest": manifest}
 
 
 def file_column_ranges(dir_path: str, column: str) -> list[tuple]:
@@ -2222,12 +2063,10 @@ def file_column_ranges(dir_path: str, column: str) -> list[tuple]:
     from footer statistics only (no data read) — the evidence surface
     for layout clustering (and exactly the stats a pruning reader
     uses)."""
-    import glob as _glob
-
     import pyarrow.parquet as _pq
 
     out = []
-    for p in sorted(_glob.glob(os.path.join(dir_path, "*.parquet"))):
+    for p in sorted(glob.glob(os.path.join(dir_path, "*.parquet"))):
         md = _pq.ParquetFile(p).metadata
         lo, hi = None, None
         for rg in range(md.num_row_groups):
@@ -2355,9 +2194,6 @@ def read_corpus(
     report against a specific manifest (``corpus_changes_since``) pass
     the one they diffed, so the returned frame's schema/pruning cannot
     drift to a NEWER commit than the report (r14, ADVICE r13 #2)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
     manifest = _manifest
     if manifest is None:
         with open(os.path.join(out_dir, MANIFEST)) as f:
@@ -2461,8 +2297,6 @@ def pin_corpus_snapshot(
     plain scans by the underscore prefix); exiting the context drops
     it, and :func:`vacuum_corpus` sweeps aged pins from crashed
     readers."""
-    import shutil as _shutil
-
     token = f"{os.getpid()}-{time.time_ns()}"
     pin_dir = os.path.join(out_dir, f"_pin_{token}")
     deadline = time.monotonic() + max_wait_sec
@@ -2472,7 +2306,7 @@ def pin_corpus_snapshot(
             _link_snapshot(out_dir, pin_dir, manifest)
             break
         except _PinRace as e:
-            _shutil.rmtree(pin_dir, ignore_errors=True)
+            shutil.rmtree(pin_dir, ignore_errors=True)
             if time.monotonic() > deadline:
                 raise SnapshotPinError(
                     f"pin_corpus_snapshot: could not assemble a "
@@ -2486,7 +2320,7 @@ def pin_corpus_snapshot(
     try:
         yield CorpusSnapshot(out_dir, pin_dir, manifest)
     finally:
-        _shutil.rmtree(pin_dir, ignore_errors=True)
+        shutil.rmtree(pin_dir, ignore_errors=True)
 
 
 def _link_snapshot(out_dir: str, pin_dir: str, manifest: dict) -> None:
@@ -2623,8 +2457,6 @@ def pin_corpus_version(
     Scale shape: O(files of one version) driver-side metadata, data
     never copied — the local-FS stand-in for reading an object-store
     table at a retained snapshot pointer."""
-    import shutil as _shutil
-
     hist = os.path.join(out_dir, MANIFEST_HISTORY, f"manifest_{token}.json")
     try:
         with open(hist) as f:
@@ -2652,7 +2484,7 @@ def pin_corpus_version(
             _link_snapshot(out_dir, pin_dir, manifest)
             break
         except _PinRace as e:
-            _shutil.rmtree(pin_dir, ignore_errors=True)
+            shutil.rmtree(pin_dir, ignore_errors=True)
             # Terminal-miss fast path (r14 optimization round): a retry
             # can only ever succeed if some writer is concurrently
             # moving this version's files (live->trash->retired). Every
@@ -2685,7 +2517,7 @@ def pin_corpus_version(
     try:
         yield CorpusSnapshot(out_dir, pin_dir, manifest)
     finally:
-        _shutil.rmtree(pin_dir, ignore_errors=True)
+        shutil.rmtree(pin_dir, ignore_errors=True)
 
 
 def expire_corpus_versions(
@@ -2734,14 +2566,13 @@ def expire_corpus_versions(
             else:
                 horizon_ns = 0  # fewer commits than K: keep everything
         expired, kept = [], []
-        import shutil as _shutil
 
         for name in sorted(os.listdir(out_dir)):
             if not name.startswith(RETIRED_PREFIX):
                 continue
             t_ns = _token_expiry_ns(name[len(RETIRED_PREFIX):])
             if purge_all or not keep or t_ns < horizon_ns:
-                _shutil.rmtree(
+                shutil.rmtree(
                     os.path.join(out_dir, name), ignore_errors=True
                 )
                 expired.append(name)
@@ -2918,8 +2749,6 @@ def q_corpus_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition overwrite, null-safe pruning predicate, checkpointed merge,
     post-write count check, incremental manifest) — not a plan that
     mimics them."""
-    from pyspark.sql import functions as F
-
     from ..schemas import load_table, scratch_dir
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -2943,8 +2772,6 @@ def _delta_from_docs(docs: DataFrame) -> DataFrame:
     a new doc appended per 50th) over ANY (doc_id, text, source)
     relation — shared by the batch roundtrip and the streaming twin so
     the two write paths merge literally the same rows."""
-    from pyspark.sql import functions as F
-
     return (
         docs.filter(F.col("doc_id") % 7 == 0)
         .select(
@@ -2980,10 +2807,7 @@ def q_corpus_upsert_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`upsert_corpus_retrying` (r10): maintenance interleaving
     between micro-batches holds the lease legitimately, and the stream
     must wait it out, not die on MaintenanceLeaseHeld."""
-    import shutil
     import tempfile
-
-    from pyspark.sql import functions as F
 
     from ..schemas import load_table, scratch_dir
     from ..streaming.jobs import stream_documents
@@ -3043,8 +2867,6 @@ def q_corpus_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator's whole contract is that compaction changes LAYOUT, never
     content; the file-count collapse and untouched-partition
     byte-identity are pinned by tests/test_corpus_io.py."""
-    from pyspark.sql import functions as F
-
     from ..schemas import load_table, scratch_dir
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -3085,10 +2907,6 @@ def q_corpus_layout_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     otherwise, so a silently-broken layout fails the driver row), and
     return the committed content — the oracle is the documents table
     (layout changes bytes' placement, never the bytes)."""
-    import glob as _glob
-
-    from pyspark.sql import functions as F
-
     from ..schemas import load_table, scratch_dir
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -3106,7 +2924,7 @@ def q_corpus_layout_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.repartition(4, "doc_id"), out, max_records_per_file=frag
     )
     cluster_corpus_layout(spark, out, target_rows_per_file=2 * frag)
-    for pdir in _glob.glob(os.path.join(out, "source=*")):
+    for pdir in glob.glob(os.path.join(out, "source=*")):
         ranges = file_column_ranges(pdir, "doc_id")
         for i, (lo1, hi1) in enumerate(ranges):
             for lo2, hi2 in ranges[i + 1:]:
@@ -3144,8 +2962,6 @@ def q_corpus_recover_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``tests/test_corpus_io.py::test_recover_corpus_after_sigkilled_writer``."""
     import json as _json
     import time as _time
-
-    from pyspark.sql import functions as F
 
     from ..schemas import load_table, scratch_dir
 
@@ -3207,10 +3023,6 @@ def q_corpus_evolve_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     before and after, so evolving costs one ordinary partition-pruned
     upsert, never a corpus rewrite; Spark null-fills the missing
     column at scan time under the manifest schema)."""
-    import glob as _glob
-
-    from pyspark.sql import functions as F
-
     from ..schemas import load_table, scratch_dir
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -3230,7 +3042,7 @@ def q_corpus_evolve_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("lang"),
     )
     untouched = {
-        k: sorted(_glob.glob(os.path.join(out, k, "*.parquet")))
+        k: sorted(glob.glob(os.path.join(out, k, "*.parquet")))
         for k in manifest0["partitions"]
         if _parse_pkey(("source",), k)[0] != msrc
     }
@@ -3238,7 +3050,7 @@ def q_corpus_evolve_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     if [f["name"] for f in manifest["schema"]["fields"]].count("lang") != 1:
         raise RuntimeError("evolve roundtrip: manifest schema lacks lang")
     for k, files in untouched.items():
-        now = sorted(_glob.glob(os.path.join(out, k, "*.parquet")))
+        now = sorted(glob.glob(os.path.join(out, k, "*.parquet")))
         if now != files:
             raise RuntimeError(
                 f"evolve roundtrip: untouched partition {k} was "
@@ -3274,8 +3086,6 @@ def q_corpus_delete_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (and absent from the manifest), and the reported deleted-row count
     equals the corpus delta, so a silent partial delete fails the
     driver row loudly."""
-    from pyspark.sql import functions as F
-
     from ..schemas import load_table, scratch_dir
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -3330,7 +3140,6 @@ def q_corpus_redact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes), and a byte sweep of every file under the corpus root must
     find no trace of the synthetic email domain."""
     import pyarrow.parquet as _pq
-    from pyspark.sql import functions as F
 
     from ..schemas import load_table, scratch_dir
 
@@ -3388,10 +3197,6 @@ def q_corpus_vacuum_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     assertions: the residue token is reported rolled-forward, nothing
     was restored, no residue dirs survive, and the deleted partition
     stays gone. The oracle computes the delete + upsert relationally."""
-    import shutil as _shutil
-
-    from pyspark.sql import functions as F
-
     from ..schemas import load_table, scratch_dir
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -3402,7 +3207,7 @@ def q_corpus_vacuum_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     msrc = docs.agg(F.max("source")).collect()[0][0]  # 1 bounded row
     gone = f"source={_hive_escape(_val_str(msrc))}"
     keep = os.path.join(out, "_keep_aside")  # fabricate-residue copy
-    _shutil.copytree(os.path.join(out, gone), keep)
+    shutil.copytree(os.path.join(out, gone), keep)
     rep = delete_from_corpus(
         spark, out, (F.col("doc_id") % 11 == 0) | (F.col("source") == msrc)
     )
@@ -3456,8 +3261,6 @@ def q_corpus_changes_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     untouched partition must be absent from the report (their
     fingerprints carried verbatim through the incremental manifest
     merge)."""
-    from pyspark.sql import functions as F
-
     from ..schemas import load_table, scratch_dir
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -3525,8 +3328,6 @@ def q_corpus_pinned_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     content-fingerprint-clean against its own manifest. A reader
     racing maintenance seeing anything but one committed version fails
     the driver row loudly."""
-    from pyspark.sql import functions as F
-
     from ..schemas import load_table, scratch_dir
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -3580,8 +3381,6 @@ def q_corpus_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     expectation the oracle computes. Row content is batch-interval-
     invariant (however commits group into micro-batches), which is
     what the driver hash proves."""
-    from pyspark.sql import functions as F
-
     from ..schemas import load_table, scratch_dir
     from ..sources import corpus_cdc
 
@@ -3670,8 +3469,6 @@ def q_corpus_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     purge_versions=True)`` the T1 pin raises
     :class:`VersionUnavailableError` (destroyed versions stay
     destroyed — the compliance contract)."""
-    from pyspark.sql import functions as F
-
     from ..schemas import load_table, scratch_dir
 
     docs = load_table(spark, sf_dir, "documents").select(

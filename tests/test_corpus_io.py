@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 import tempfile
 
+import pytest
 from conftest import SF_DIR
 from pyspark.sql import functions as F
 
@@ -991,8 +992,34 @@ def test_release_restores_successors_lease_swapped_in_midway(
     assert not [p for p in os.listdir(out) if ".release." in p]
 
 
+#: every writer that commits through the shared rewrite transaction:
+#: (corpus build options, the write). Compaction needs fragmented
+#: partitions, or it plans nothing and never reaches the swap.
+_SWAP_WRITERS = {
+    "upsert": ({}, lambda spark, docs, out: corpus_io.upsert_corpus(
+        docs.limit(3).select(
+            "doc_id", F.lit("CLOBBER").alias("text"), "source"
+        ),
+        out,
+    )),
+    "compact": ({"max_records_per_file": 5}, lambda spark, docs, out: (
+        corpus_io.compact_corpus(spark, out)
+    )),
+    "layout": ({}, lambda spark, docs, out: (
+        corpus_io.cluster_corpus_layout(spark, out)
+    )),
+    "delete": ({}, lambda spark, docs, out: (
+        corpus_io.delete_from_corpus(spark, out, F.col("doc_id") % 2 == 0)
+    )),
+    "redact": ({}, lambda spark, docs, out: (
+        corpus_io.redact_column_from_corpus(spark, out, "text")
+    )),
+}
+
+
+@pytest.mark.parametrize("writer", sorted(_SWAP_WRITERS))
 def test_staged_swap_aborts_cleanly_when_lease_breaks_mid_job(
-    monkeypatch, spark
+    monkeypatch, spark, writer
 ):
     """The r10 staged commit's whole point (r09 review: the
     fence-then-write window used to span the entire Spark write job):
@@ -1000,18 +1027,21 @@ def test_staged_swap_aborts_cleanly_when_lease_breaks_mid_job(
     abort at the pre-swap fence with the live corpus byte-untouched —
     the write went to private staging, so nothing was clobbered — and
     no _staging_/_trash_ debris left behind. Injected by swapping in a
-    successor's lease right before the in-swap fence check."""
+    successor's lease right before the in-swap fence check. Every
+    writer shares the fence (one rewrite transaction), so every writer
+    is driven through it."""
     import json as _json
     import time as _time
 
     import pytest
 
+    build, write = _SWAP_WRITERS[writer]
     docs = load_table(spark, SF_DIR, "documents").select(
         "doc_id", "text", "source"
     )
     with tempfile.TemporaryDirectory() as base:
         out = os.path.join(base, "corpus")
-        corpus_io.write_partitioned_corpus(docs, out)
+        corpus_io.write_partitioned_corpus(docs, out, **build)
         some_dir = next(
             os.path.join(out, d)
             for d in sorted(os.listdir(out))
@@ -1038,11 +1068,8 @@ def test_staged_swap_aborts_cleanly_when_lease_breaks_mid_job(
             return real_check(d, tok)
 
         monkeypatch.setattr(corpus_io, "check_lease", inject)
-        delta = docs.limit(3).select(
-            "doc_id", F.lit("CLOBBER").alias("text"), "source"
-        )
         with pytest.raises(corpus_io.MaintenanceLeaseHeld):
-            corpus_io.upsert_corpus(delta, out)
+            write(spark, docs, out)
         monkeypatch.setattr(corpus_io, "check_lease", real_check)
         # live corpus byte-untouched: same rows, same files, no CLOBBER
         assert spark.read.parquet(out).count() == n0
@@ -1064,6 +1091,62 @@ def test_staged_swap_aborts_cleanly_when_lease_breaks_mid_job(
             assert _json.load(f)["token"] == "successor-tok"
         os.unlink(os.path.join(out, corpus_io.LEASE))
         assert corpus_io.verify_manifest(spark, out)
+
+
+def test_writers_take_partition_columns_from_the_manifest(spark):
+    """A corpus partitioned by (source, split): delete, compaction and
+    layout clustering read both columns from the manifest — assuming
+    the default ('source',) made delete swap a flat source=*/ tree over
+    the nested layout, after which every reader of the corpus failed —
+    and an upsert naming other columns than the manifest raises before
+    any write, leaving the corpus byte-unchanged."""
+    import hashlib
+
+    docs = spark.range(200).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("doc "), F.col("id").cast("string")).alias("text"),
+        F.concat(F.lit("s"), (F.col("id") % 2).cast("string")).alias(
+            "source"
+        ),
+        F.when(F.col("id") % 5 == 0, "test").otherwise("train").alias(
+            "split"
+        ),
+    )
+
+    def snapshot(out):
+        tree = {}
+        for root, _, files in os.walk(out):
+            for fn in files:
+                path = os.path.join(root, fn)
+                with open(path, "rb") as f:
+                    tree[os.path.relpath(path, out)] = hashlib.sha256(
+                        f.read()
+                    ).hexdigest()
+        return tree
+
+    with tempfile.TemporaryDirectory() as base:
+        out = os.path.join(base, "corpus")
+        corpus_io.write_partitioned_corpus(
+            docs, out, ("source", "split"), max_records_per_file=10
+        )
+        rep = corpus_io.delete_from_corpus(spark, out, "doc_id = 4")
+        assert rep["deleted_rows"] == 1
+        assert corpus_io.verify_manifest(spark, out)
+        assert corpus_io.compact_corpus(spark, out)["compacted"]
+        assert corpus_io.verify_manifest(spark, out)
+        corpus_io.cluster_corpus_layout(spark, out)
+        assert corpus_io.verify_manifest(spark, out)
+        assert corpus_io.read_corpus(spark, out).count() == 199
+
+        before = snapshot(out)
+        delta = docs.filter("doc_id = 7").withColumn("text", F.lit("new"))
+        with pytest.raises(ValueError, match="partitioned by"):
+            corpus_io.upsert_corpus(delta, out)  # default ('source',)
+        assert snapshot(out) == before
+        assert not [
+            d for d in os.listdir(out)
+            if d.startswith(("_staging_", "_trash_"))
+        ]
 
 
 def test_partition_values_with_hive_escaped_chars_roundtrip(spark):

@@ -185,3 +185,41 @@ def test_no_duplicate_top_level_definitions():
             names = Counter(n.name for n in body if isinstance(n, defs))
             dups += [f"{path}: {n}" for n, c in names.items() if c > 1]
     assert dups == []
+
+
+def test_tools_reference_only_live_corpus_io_names():
+    """Every ``corpus_io.<attr>`` a tool script uses, and every name it
+    imports from the corpus_io module, must exist: a helper or option
+    removed from corpus_io must not leave a script behind that only
+    fails when someone runs it. AST scan; no script is executed."""
+    import ast
+    import glob
+    import os
+
+    from flink_stream_processing_refarch_spark.operators import corpus_io
+
+    module = "flink_stream_processing_refarch_spark.operators.corpus_io"
+    tools = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
+    )
+    missing = []
+    for path in sorted(glob.glob(os.path.join(tools, "*.py"))):
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "corpus_io"
+            ):
+                names = [node.attr]
+            elif isinstance(node, ast.ImportFrom) and node.module == module:
+                names = [a.name for a in node.names]
+            else:
+                continue
+            missing += [
+                f"{os.path.basename(path)}:{node.lineno}: {n}"
+                for n in names
+                if not hasattr(corpus_io, n)
+            ]
+    assert missing == []
