@@ -57,29 +57,21 @@ from flink_stream_processing_refarch_spark.streaming import jobs as streaming_jo
 # ``tools/make_ledger.py --changed ...`` (VERDICT r09 #7): changed-this-
 # round entries first in registry order, then every other entry ranked
 # by oldest last-green round (registry order as tiebreak), first 50 win.
-# The changed set (15 entries, LEDGER.md) is every entry that runs a
-# corpus writer now committing through the one shared rewrite
-# transaction (corpus_io._rewrite_partitions): the 13 corpus_io
-# roundtrip/streaming entries plus the two CDC index refreshes, which
-# upsert and delete. Per-round
+# The changed set (8 entries, LEDGER.md) is the four batch/stream twins
+# whose state is now one shared definition beside the batch entry
+# (session windows, CMS cells, the quantile histogram tail, source
+# drift): both entries of each pair. Per-round
 # rotation rationale lives in the git history of this file.
 PRIORITY = [
     # ---- slots 1-50: the correctness window (== LEDGER next-window) ----
-    "corpus_vacuum_roundtrip",
-    "corpus_time_travel",
-    "corpus_recover_roundtrip",
-    "corpus_upsert_roundtrip",
-    "corpus_upsert_streaming",
-    "corpus_compact_roundtrip",
-    "corpus_layout_roundtrip",
-    "corpus_evolve_roundtrip",
-    "corpus_delete_roundtrip",
-    "corpus_changes_roundtrip",
-    "corpus_pinned_snapshot",
-    "cdc_index_refresh",
-    "corpus_cdc_stream",
-    "cdc_index_refresh_streaming",
-    "corpus_redact_roundtrip",
+    "quantile_histogram_streaming",
+    "source_drift",
+    "source_drift_streaming",
+    "session_windows",
+    "session_windows_streaming",
+    "heavy_hitters_cms",
+    "quantile_histogram",
+    "heavy_hitters_streaming",
     "taxi_pipeline",
     "q1_pickup_count",
     "q2_trip_duration",
@@ -109,18 +101,9 @@ PRIORITY = [
     "bpe_train",
     "bpe_token_count",
     "source_signature_terms",
-    "quantile_histogram_streaming",
     "knn_label_accuracy",
     "ann_recall_eval",
-    "source_drift",
-    "source_drift_streaming",
     "importance_resampling",
-    # ---- past the window: green rows over plans whose results are
-    # unchanged (see LEDGER.md) ----
-    "trending_cells",
-    "q1_kinesis_wire",
-    "trips_clean",
-    "airport_trips",
     "lm_perplexity",
     "bm25_score",
     "bm25_topk_batch",
@@ -129,6 +112,28 @@ PRIORITY = [
     "doc_fingerprint",
     "udtf_word_positions",
     "split_train_test",
+    "split_counts",
+    "corpus_recover_roundtrip",
+    # ---- past the window: green rows over plans whose results are
+    # unchanged (see LEDGER.md) ----
+    "corpus_vacuum_roundtrip",
+    "corpus_time_travel",
+    "corpus_upsert_roundtrip",
+    "corpus_upsert_streaming",
+    "corpus_compact_roundtrip",
+    "corpus_layout_roundtrip",
+    "corpus_evolve_roundtrip",
+    "corpus_delete_roundtrip",
+    "corpus_changes_roundtrip",
+    "corpus_pinned_snapshot",
+    "cdc_index_refresh",
+    "corpus_cdc_stream",
+    "cdc_index_refresh_streaming",
+    "corpus_redact_roundtrip",
+    "trending_cells",
+    "q1_kinesis_wire",
+    "trips_clean",
+    "airport_trips",
     "minhash_signatures",
     "ngram_jaccard",
     "corpus_build",
@@ -154,23 +159,18 @@ PRIORITY = [
     "time_rollup",
     "asof_join",
     "sliding_window_counts",
-    "session_windows",
     "skew_salted_join",
     "retention_cohorts",
     "funnel_completion",
     "stream_static_join",
     "vocab_stats",
     "doc_chunks",
-    "session_windows_streaming",
     "stream_stream_join",
     "stream_stream_left_join",
     "streaming_dedup",
-    "heavy_hitters_cms",
     "feature_hashing",
-    "quantile_histogram",
     "curriculum_order",
     "vocab_coverage",
-    "heavy_hitters_streaming",
     "large_orders",
     "top_supplier",
     "part_promotion",
@@ -240,7 +240,6 @@ PRIORITY = [
     "pii_scrub",
     "global_row_number",
     "bigram_lm",
-    "split_counts",
 ]
 
 

@@ -775,6 +775,32 @@ def _partition_pred(
     return pred
 
 
+def _prior_manifest(out_dir: str) -> dict | None:
+    """The committed manifest, or None when it is missing or corrupt (a
+    crash between data commit and manifest dump)."""
+    try:
+        with open(os.path.join(out_dir, MANIFEST)) as f:
+            return json.load(f)
+    except (FileNotFoundError, json.JSONDecodeError):
+        return None
+
+
+def _check_partition_cols(
+    op: str, prior: dict | None, partition_cols: tuple[str, ...]
+) -> None:
+    """Refuse, before any write, a build or upsert whose
+    ``partition_cols`` differ from the committed manifest's."""
+    if prior is not None and (
+        tuple(prior["partition_cols"]) != tuple(partition_cols)
+    ):
+        raise ValueError(
+            f"{op}: the corpus is partitioned by "
+            f"{tuple(prior['partition_cols'])}, not "
+            f"{tuple(partition_cols)} — pass the manifest's "
+            "partition_cols"
+        )
+
+
 def write_partitioned_corpus(
     df: DataFrame,
     out_dir: str,
@@ -793,6 +819,12 @@ def write_partitioned_corpus(
     spark = df.sparkSession
     os.makedirs(out_dir, exist_ok=True)
     with corpus_lease(out_dir, "build") as tok:
+        # dynamic overwrite under other partition columns would replace
+        # whole live top-level dirs, and the new manifest would bless
+        # only the rows just written
+        _check_partition_cols(
+            "write_partitioned_corpus", _prior_manifest(out_dir), partition_cols
+        )
         check_lease(out_dir, tok)
         (
             df.write.mode("overwrite")
@@ -981,26 +1013,13 @@ def upsert_corpus(
     """
     with corpus_lease(out_dir, "upsert") as tok:
         spark = delta.sparkSession
-        try:
-            with open(os.path.join(out_dir, MANIFEST)) as f:
-                prior = json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
-            # missing/corrupt manifest (crash between data commit and
-            # manifest dump): proceed with the merge and REBUILD the
-            # manifest from a full read-back afterwards — the recovery
-            # path, where a full scan is the correct price
-            prior = None
-        if prior is not None and (
-            tuple(prior["partition_cols"]) != tuple(partition_cols)
-        ):
-            # the swap would lay a differently-nested tree over the live
-            # layout, and every reader of the corpus would fail
-            raise ValueError(
-                "upsert_corpus: the corpus is partitioned by "
-                f"{tuple(prior['partition_cols'])}, not "
-                f"{tuple(partition_cols)} — pass the manifest's "
-                "partition_cols"
-            )
+        # a missing/corrupt manifest (None): proceed with the merge and
+        # REBUILD the manifest from a full read-back afterwards — the
+        # recovery path, where a full scan is the correct price
+        prior = _prior_manifest(out_dir)
+        # the swap would lay a differently-nested tree over the live
+        # layout, and every reader of the corpus would fail
+        _check_partition_cols("upsert_corpus", prior, partition_cols)
         # with no manifest the read-back cannot trust a single footer
         # (the corpus may have evolved) — recover the union width from
         # the files

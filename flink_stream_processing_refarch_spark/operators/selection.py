@@ -38,6 +38,10 @@ Scale posture:
     SHUFFLE-join regime (unlike decontaminate's broadcast-probe):
     each side hash-partitions on the 128-bit shingle hash and the
     exchange carries (hash, doc_id) pairs only.
+  - source_drift: ``drift_cells`` is the bounded (source, bucket) state
+    of both the batch entry and its streaming twin
+    (streaming/jobs.q_source_drift_streaming); ``drift_report`` is the
+    KL finisher both read.
 """
 
 from __future__ import annotations
@@ -214,25 +218,29 @@ def q_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = spread(
         docs.select("source", "text"), src_path=f"{sf_dir}/documents.parquet"
     )
-    wb = base.select(
-        "source", F.explode(F.expr(words_expr("text", "spark"))).alias("w")
-    ).select("source", F.substring(F.md5("w"), 1, 2).alias("b"))
     # ONE corpus scan: per_src is the bounded (sources x 256)-row base
     # every downstream relation derives from; checkpoint it so the four
     # consumers (src totals, corpus bucket counts, grand total, grid
     # join) don't each re-run the tokenize+md5 scan — measured 4
     # FileScans -> 1 (the same working-set pattern as semantic_dedup's
     # quantized vectors).
-    per_src = (
-        wb.groupBy("source", "b")
-        .agg(F.count("*").alias("c_sb"))
-        .localCheckpoint(eager=False)
-    )
-    return drift_report(per_src)
+    return drift_report(drift_cells(base).localCheckpoint(eager=False))
+
+
+def drift_cells(docs: DataFrame) -> DataFrame:
+    """Per-(source, md5-bucket) token counts ``c_sb`` over any documents
+    frame, batch or stream — the state the drift monitor keeps. It is
+    bounded at |sources| x FEAT_BUCKETS rows no matter how much corpus
+    flows through, and text never crosses the exchange (each partition
+    ships partially combined counts)."""
+    wb = docs.select(
+        "source", F.explode(F.expr(words_expr("text", "spark"))).alias("w")
+    ).select("source", F.substring(F.md5("w"), 1, 2).alias("b"))
+    return wb.groupBy("source", "b").agg(F.count("*").alias("c_sb"))
 
 
 def drift_report(per_src: DataFrame) -> DataFrame:
-    """The KL finisher over the bounded (source, bucket, c_sb) relation —
+    """The KL finisher over the bounded ``drift_cells`` relation —
     shared by the batch operator (checkpointed corpus aggregate) and the
     streaming twin (the complete-mode merged snapshot, streaming/jobs.py),
     so both walk the identical exact-integer KL arithmetic."""

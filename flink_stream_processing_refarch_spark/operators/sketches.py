@@ -27,6 +27,13 @@ Scale posture:
     merged histogram's cumulative sum. The only windowed scans run over
     AGGREGATED relations whose size is bounded by the bin count /
     distinct metric values, never over raw rows.
+
+Streaming twins (streaming/jobs.py) bind to the state functions here, so
+each sketch is written once: ``cms_cells`` is the CMS state of both
+heavy_hitters_cms and heavy_hitters_streaming; ``cents_histogram`` is
+quantile_histogram_streaming's state, and ``histogram_quantiles`` (Spark)
+and ``histogram_quantiles_sql`` (DuckDB) are the quantile tail of both
+histogram entries. Each caller names its output columns itself.
 """
 
 from __future__ import annotations
@@ -41,7 +48,13 @@ CMS_W = 256   # buckets per row (2 md5 hex chars)
 HH_K = 20     # heavy hitters reported
 
 QH_BIN_W = 16             # n_chars histogram bin width
-QH_PCTS = (50, 90, 99)    # quantiles estimated from the merged histogram
+QH_EV_BIN_CENTS = 800     # events.value histogram bin width in cents ($8)
+QH_PCTS = (50, 90, 99)    # quantiles estimated from a merged histogram
+
+VALUE_CENTS = (
+    "CAST(floor(value * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))"
+    " AS BIGINT)"
+)
 
 
 # ---------------------------------------------------------------------------
@@ -111,10 +124,20 @@ def q_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     heavy_hitters_streaming IS that incremental build) and only the
     probe runs per query."""
     ev = load_table(spark, sf_dir, "events")
-    cells = (
-        cms_salted(ev).groupBy("r", "bkt").agg(F.count("*").alias("cell_n"))
+    return cms_topk_report(cms_cells(ev), ev)
+
+
+def cms_cells(ev: DataFrame) -> DataFrame:
+    """The sketch itself: (r, bkt, cell_n) counts over any events frame,
+    batch or stream. As streaming state it is CMS_D x CMS_W rows,
+    bounded regardless of stream length or key cardinality, and each
+    micro-batch's increments merge by cell addition — so the bounded
+    stream's final snapshot is the batch sketch exactly."""
+    return (
+        cms_salted(ev.select("user_id"))
+        .groupBy("r", "bkt")
+        .agg(F.count("*").alias("cell_n"))
     )
-    return cms_topk_report(cells, ev)
 
 
 def _heavy_hitters_cms_sql() -> str:
@@ -143,7 +166,7 @@ LIMIT {HH_K}
 
 
 # ---------------------------------------------------------------------------
-# Mergeable quantile histogram (documents.n_chars)
+# Mergeable quantile histograms (documents.n_chars; events.value in cents)
 # ---------------------------------------------------------------------------
 
 def q_quantile_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -151,17 +174,7 @@ def q_quantile_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source fixed-bin histograms, with the exact quantile value
     alongside — the mergeable-quantile counterpart of sketch_rollup's
     HLL union: sketch each source once (O(bins) integer rows), answer
-    global quantiles from the merged histogram with no rescan.
-
-    Exactness contract: the estimate is the exclusive upper edge of the
-    first histogram bin whose cumulative count reaches ceil(pct/100 *
-    total) — an integer rule both engines compute identically; the
-    in-row invariant 0 <= est_hi - exact_val <= QH_BIN_W (the sketch's
-    guaranteed error bound) is part of the hashed output. The exact
-    value comes from a cumulative sum over the value-level histogram —
-    a window over an AGGREGATED relation bounded by |distinct n_chars|
-    (<= ~500 here, never raw rows), the same bounded-window discipline
-    as length_histogram."""
+    global quantiles from the merged histogram with no rescan."""
     docs = load_table(spark, sf_dir, "documents")
     # Per-source histograms (the mergeable per-shard summaries) ...
     per_src = docs.groupBy(
@@ -169,14 +182,53 @@ def q_quantile_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count("*").alias("n"))
     # ... merged by cell addition: the only thing a global consumer reads.
     merged = per_src.groupBy("bin").agg(F.sum("n").alias("n"))
-    cum = merged.select(
-        "bin",
-        F.sum("n").over(Window.orderBy("bin").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )).alias("cum"),
+    return histogram_quantiles(merged, docs.select("n_chars"), QH_BIN_W)
+
+
+def value_cents(ev: DataFrame) -> DataFrame:
+    """Event value quantized to exact integer cents (column ``cents``)."""
+    return ev.select(F.expr(VALUE_CENTS).alias("cents"))
+
+
+def cents_histogram(ev: DataFrame) -> DataFrame:
+    """Fixed-bin (bin, n) histogram of event value in cents over any
+    events frame, batch or stream. As streaming state it is bounded by
+    the bin count regardless of stream length, and bin addition is
+    associative, so the bounded stream's final snapshot is the batch
+    histogram exactly (jobs.q_quantile_histogram_streaming)."""
+    return (
+        value_cents(ev)
+        .groupBy(F.expr(f"cents DIV {QH_EV_BIN_CENTS}").alias("bin"))
+        .agg(F.count("*").alias("n"))
     )
+
+
+def histogram_quantiles(
+    merged: DataFrame, values: DataFrame, bin_w: int
+) -> DataFrame:
+    """QH_PCTS quantiles of a merged fixed-bin histogram ``merged`` (bin,
+    n) with bin width ``bin_w``, and the exact quantile of ``values`` (a
+    one-column frame of the binned values) alongside.
+
+    Exactness contract: the estimate ``est_hi`` is the exclusive upper
+    edge of the first bin whose cumulative count reaches ceil(pct/100 *
+    total) — an integer rule both engines compute identically; the
+    in-row invariant 0 <= est_hi - exact_val <= bin_w (the sketch's
+    guaranteed error bound) is part of the hashed output. The exact
+    value comes from a cumulative sum over the value-level histogram —
+    a window over an AGGREGATED relation bounded by the distinct value
+    count (never raw rows), the same bounded-window discipline as
+    length_histogram."""
+    (col,) = values.columns
+
+    def running(key: str):
+        return Window.orderBy(key).rowsBetween(
+            Window.unboundedPreceding, Window.currentRow
+        )
+
+    cum = merged.select("bin", F.sum("n").over(running("bin")).alias("cum"))
     total = merged.agg(F.sum("n").alias("total"))
-    pcts = spark.range(1).select(
+    pcts = merged.sparkSession.range(1).select(
         F.explode(F.array(*[F.lit(p) for p in QH_PCTS])).alias("pct")
     )
     thr = pcts.crossJoin(F.broadcast(total)).select(
@@ -189,19 +241,12 @@ def q_quantile_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         thr.join(F.broadcast(cum), F.col("cum") >= F.col("thr"))
         .groupBy("pct")
         .agg(F.min("thr").alias("thr"), F.min("bin").alias("bin"))
-        .select(
-            "pct", "thr", ((F.col("bin") + 1) * QH_BIN_W).alias("est_hi")
-        )
+        .select("pct", "thr", ((F.col("bin") + 1) * bin_w).alias("est_hi"))
     )
     vcum = (
-        docs.groupBy("n_chars")
+        values.groupBy(col)
         .agg(F.count("*").alias("n"))
-        .select(
-            "n_chars",
-            F.sum("n").over(Window.orderBy("n_chars").rowsBetween(
-                Window.unboundedPreceding, Window.currentRow
-            )).alias("cum"),
-        )
+        .select(col, F.sum("n").over(running(col)).alias("cum"))
     )
     exact = (
         est.join(F.broadcast(vcum), F.col("cum") >= F.col("thr"))
@@ -209,7 +254,7 @@ def q_quantile_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.min("thr").alias("thr"),
             F.min("est_hi").alias("est_hi"),
-            F.min("n_chars").alias("exact_val"),
+            F.min(col).alias("exact_val"),
         )
     )
     return exact.select(
@@ -219,19 +264,20 @@ def q_quantile_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         "exact_val",
         (
             (F.col("est_hi") - F.col("exact_val") >= 0)
-            & (F.col("est_hi") - F.col("exact_val") <= QH_BIN_W)
+            & (F.col("est_hi") - F.col("exact_val") <= bin_w)
         ).alias("bound_ok"),
     )
 
 
-def _quantile_histogram_sql() -> str:
+def histogram_quantiles_sql(
+    ctes: str, values: str, col: str, bin_w: int
+) -> str:
+    """DuckDB twin of ``histogram_quantiles``: ``ctes`` must define
+    ``merged(bin, n)``; ``values`` is the relation holding column
+    ``col``."""
     pcts = ", ".join(str(p) for p in QH_PCTS)
     return f"""
-WITH per_src AS (
-  SELECT source, CAST(floor(n_chars / {QH_BIN_W}) AS BIGINT) AS bin,
-         count(*) AS n
-  FROM documents GROUP BY 1, 2),
-merged AS (SELECT bin, CAST(sum(n) AS BIGINT) AS n FROM per_src GROUP BY bin),
+WITH {ctes},
 cum AS (
   SELECT bin, CAST(sum(n) OVER (ORDER BY bin
     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
@@ -241,21 +287,48 @@ thr AS (
   SELECT pct, CAST(floor((total * pct + 99) / 100) AS BIGINT) AS thr
   FROM (SELECT unnest([{pcts}]) AS pct) CROSS JOIN total),
 est AS (
-  SELECT pct, min(thr) AS thr, (min(bin) + 1) * {QH_BIN_W} AS est_hi
+  SELECT pct, min(thr) AS thr, (min(bin) + 1) * {bin_w} AS est_hi
   FROM thr JOIN cum ON cum >= thr GROUP BY pct),
 vcum AS (
-  SELECT n_chars, CAST(sum(n) OVER (ORDER BY n_chars
+  SELECT {col}, CAST(sum(n) OVER (ORDER BY {col}
     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-  FROM (SELECT n_chars, count(*) AS n FROM documents GROUP BY n_chars)),
+  FROM (SELECT {col}, count(*) AS n FROM {values} GROUP BY {col})),
 ex AS (
   SELECT pct, min(thr) AS thr, min(est_hi) AS est_hi,
-         min(n_chars) AS exact_val
+         min({col}) AS exact_val
   FROM est JOIN vcum ON cum >= thr GROUP BY pct)
 SELECT pct, thr, est_hi, CAST(exact_val AS BIGINT) AS exact_val,
-       est_hi - exact_val >= 0 AND est_hi - exact_val <= {QH_BIN_W}
+       est_hi - exact_val >= 0 AND est_hi - exact_val <= {bin_w}
          AS bound_ok
 FROM ex
 """
+
+
+def _quantile_histogram_sql() -> str:
+    return histogram_quantiles_sql(
+        f"""per_src AS (
+  SELECT source, CAST(floor(n_chars / {QH_BIN_W}) AS BIGINT) AS bin,
+         count(*) AS n
+  FROM documents GROUP BY 1, 2),
+merged AS (SELECT bin, CAST(sum(n) AS BIGINT) AS n FROM per_src GROUP BY bin)""",
+        "documents",
+        "n_chars",
+        QH_BIN_W,
+    )
+
+
+def cents_histogram_quantiles_sql() -> str:
+    """DuckDB twin of ``histogram_quantiles`` over ``cents_histogram``
+    of the events table."""
+    return histogram_quantiles_sql(
+        f"""cents_t AS (SELECT {VALUE_CENTS} AS cents FROM events),
+merged AS (
+  SELECT cents // {QH_EV_BIN_CENTS} AS bin, count(*) AS n
+  FROM cents_t GROUP BY 1)""",
+        "cents_t",
+        "cents",
+        QH_EV_BIN_CENTS,
+    )
 
 
 QUERIES = {

@@ -575,14 +575,31 @@ GROUP BY ws_ms, event_type
 """
 
 
+SESSION_GAP_MIN = 30
+
+
 def q_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows per user with a 30-minute gap (session_window in
     batch mode; oracle = gaps-and-islands with lag + cumulative sum)."""
-    ev = load_events(spark, sf_dir).withColumn(
-        "ts_t", F.timestamp_micros(F.expr("ts DIV 1000"))
+    return session_windows(
+        load_events(spark, sf_dir).withColumn(
+            "ts_t", F.timestamp_micros(F.expr("ts DIV 1000"))
+        )
     )
+
+
+def session_windows(ev_ts: DataFrame) -> DataFrame:
+    """The per-user session-window count over any ``ts_t``-enriched
+    events frame, batch or stream. The 0 s watermark lets a stream emit
+    a session once event time passes its end (append mode); on batch
+    input the optimizer drops it, so ``q_session_windows`` and
+    ``jobs.q_session_windows_streaming`` run this one definition."""
     return (
-        ev.groupBy(F.session_window("ts_t", "30 minutes").alias("w"), "user_id")
+        ev_ts.withWatermark("ts_t", "0 seconds")
+        .groupBy(
+            F.session_window("ts_t", f"{SESSION_GAP_MIN} minutes").alias("w"),
+            "user_id",
+        )
         .agg(F.count("*").alias("n_events"))
         .select(
             "user_id",

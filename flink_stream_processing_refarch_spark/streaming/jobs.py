@@ -8,6 +8,14 @@ the same definitions as the batch queries, keyed by Spark's event-time
 ``window()`` instead of batch's epoch-ms window end (why batch keeps its
 own key: the ``plans/taxi.py`` docstring).
 
+The other batch/stream twins follow the same rule: their streaming
+entries here are only bindings (stream source, ``_run_to_memory``, the
+batch entry's report) over a state function written once beside its
+batch entry — ``plans/relational.session_windows``,
+``operators/sketches.cms_cells``, ``operators/sketches.cents_histogram``
+(finished by ``sketches.histogram_quantiles``) and
+``operators/selection.drift_cells``.
+
 Watermark semantics (SURVEY.md §4.3): the reference uses punctuated
 in-band watermarks injected by the producer; Spark derives the watermark
 from the event-time column (``withWatermark``). On bounded input with the
@@ -41,7 +49,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.selection import drift_cells, drift_report
+from ..operators.sketches import (
+    QH_EV_BIN_CENTS,
+    _heavy_hitters_cms_sql,
+    cents_histogram,
+    cents_histogram_quantiles_sql,
+    cms_cells,
+    cms_topk_report,
+    histogram_quantiles,
+    value_cents,
+)
+# the streaming quantile report's percentiles, under its own name
+from ..operators.sketches import QH_PCTS as QH_EV_PCTS  # noqa: F401
 from ..plans import taxi
+from ..plans.relational import SESSION_GAP_MIN, session_windows
 from ..sources.trips import clean_trip_filter_sql, trip_exprs
 
 # Normalized events schema: what stream_events/load_table emit after the
@@ -1033,7 +1055,6 @@ FROM events
 """
 
 
-SESSION_GAP_MIN = 30
 _SESSION_GAP_US = SESSION_GAP_MIN * 60 * 1_000_000
 
 _SESSION_OUT_SCHEMA = T.StructType(
@@ -1251,39 +1272,15 @@ WHERE session_end_ms <= (SELECT max(epoch_ms(ts)) FROM events)
 """
 
 
-def session_windows_stream_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Built-in STREAMING session windows (the declarative, preferred
-    form of the custom sessionizer below): session_window + watermark in
-    append mode. Spark merges overlapping per-key session state and emits
-    a session once the watermark passes its end — the same closure rule
-    _sessionize_fn implements by hand, so both share one oracle. Prefer
-    this over the custom operator wherever plain per-session aggregates
-    suffice; reach for applyInPandasWithState only when the per-session
-    logic needs arbitrary state/output."""
-    return session_windows_from_events(_stream_events_ts(spark, sf_dir))
-
-
-def session_windows_from_events(ev_ts: DataFrame) -> DataFrame:
-    """The session-window aggregation over any ts_t-enriched events
-    stream (source-agnostic)."""
-    ev = ev_ts.withWatermark("ts_t", "0 seconds")
-    return (
-        ev.groupBy(
-            F.session_window("ts_t", f"{SESSION_GAP_MIN} minutes").alias("w"),
-            "user_id",
-        )
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.unix_millis("w.start").alias("session_start_ms"),
-            F.unix_millis("w.end").alias("session_end_ms"),
-            "n_events",
-        )
-    )
-
-
 def q_session_windows_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _run_to_memory(session_windows_stream_df(spark, sf_dir))
+    """Built-in STREAMING session windows (the declarative, preferred
+    form of the custom sessionizer above): ``relational.session_windows``
+    over the event stream in append mode. Spark merges overlapping
+    per-key session state and emits a session once the watermark passes
+    its end — the same closure rule _sessionize_fn implements by hand,
+    so both share one oracle. Reach for applyInPandasWithState only when
+    the per-session logic needs arbitrary state/output."""
+    return _run_to_memory(session_windows(_stream_events_ts(spark, sf_dir)))
 
 
 # ---------------------------------------------------------------------------
@@ -1438,45 +1435,20 @@ def q_taxi_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def heavy_hitters_stream_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running CMS cell counts over the event stream: each micro-batch's
-    cell increments merge into the persistent (r, bkt) counters — the
-    cell-addition mergeability the batch operator claims, exercised as
-    an actual incremental computation. Streaming state is the sketch
-    itself: CMS_D x CMS_W rows, BOUNDED regardless of stream length or
-    key cardinality (the whole point of sketching the stream instead of
-    keeping per-key counts)."""
+def q_heavy_hitters_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bounded replay of the streaming CMS build (``sketches.cms_cells``
+    over the event stream, complete mode — the final sketch snapshot is
+    the result), then the same broadcast-probe top-k report as the batch
+    twin. End state over the bounded stream equals the batch sketch
+    exactly, so the batch oracle applies verbatim; the multi-batch
+    source split (maxFilesPerTrigger) means every driver check proves
+    sketch merges across micro-batches."""
+    from ..schemas import load_table
+
     ev = stream_events(
         spark, sf_dir, maxFilesPerTrigger=half_source_files(spark, sf_dir)
     )
-    return heavy_hitters_from_events(ev)
-
-
-def heavy_hitters_from_events(ev: DataFrame) -> DataFrame:
-    """The CMS cell aggregation over any raw events stream
-    (source-agnostic)."""
-    from ..operators.sketches import cms_salted
-
-    return (
-        cms_salted(ev.select("user_id"))
-        .groupBy("r", "bkt")
-        .agg(F.count("*").alias("cell_n"))
-    )
-
-
-def q_heavy_hitters_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded replay of the streaming CMS build (complete mode — the
-    final sketch snapshot is the result), then the same broadcast-probe
-    top-k report as the batch twin. End state over the bounded stream
-    equals the batch sketch exactly, so the batch oracle applies
-    verbatim; the multi-batch source split (maxFilesPerTrigger) means
-    every driver check proves sketch merges across micro-batches."""
-    from ..operators.sketches import cms_topk_report
-    from ..schemas import load_table
-
-    cells = _run_to_memory(
-        heavy_hitters_stream_df(spark, sf_dir), output_mode="complete"
-    )
+    cells = _run_to_memory(cms_cells(ev), output_mode="complete")
     return cms_topk_report(cells, load_table(spark, sf_dir, "events"))
 
 
@@ -1484,154 +1456,25 @@ def q_heavy_hitters_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming mergeable quantile histogram (events.value, cents-exact)
 # ---------------------------------------------------------------------------
 
-QH_EV_BIN_CENTS = 800  # histogram bin width over value in cents ($8)
-QH_EV_PCTS = (50, 90, 99)
-
-
-def quantile_stream_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running fixed-bin histogram of event value (quantized to exact
-    cents) over the stream — the quantile counterpart of the streaming
-    CMS: per-micro-batch bin increments merge into the persistent
-    counters, and state is BOUNDED by the bin count regardless of
-    stream length."""
-    ev = stream_events(
-        spark, sf_dir, maxFilesPerTrigger=half_source_files(spark, sf_dir)
-    )
-    return quantile_hist_from_events(ev)
-
-
-def quantile_hist_from_events(ev: DataFrame) -> DataFrame:
-    """The fixed-bin histogram aggregation over any raw events stream
-    (source-agnostic)."""
-    cents = F.expr(
-        "CAST(floor(value * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))"
-        " AS BIGINT)"
-    )
-    return (
-        ev.select(cents.alias("cents"))
-        .groupBy(F.expr(f"cents DIV {QH_EV_BIN_CENTS}").alias("bin"))
-        .agg(F.count("*").alias("n"))
-    )
-
 
 def q_quantile_histogram_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global p50/p90/p99 of event value estimated from the
-    STREAM-MERGED histogram snapshot (complete mode), exact value
-    alongside from the batch table — same estimate/threshold integer
-    rules as the batch quantile_histogram, same in-row error-bound
-    invariant. The multi-batch source split means every driver check
-    proves histogram merges across micro-batches."""
-    from pyspark.sql import Window
-
+    STREAM-MERGED ``sketches.cents_histogram`` snapshot (complete mode),
+    exact value alongside from the batch table — the same
+    ``histogram_quantiles`` tail as the batch quantile_histogram, same
+    in-row error-bound invariant. The multi-batch source split means
+    every driver check proves histogram merges across micro-batches."""
     from ..schemas import load_table
 
-    merged = _run_to_memory(
-        quantile_stream_df(spark, sf_dir), output_mode="complete"
+    ev = stream_events(
+        spark, sf_dir, maxFilesPerTrigger=half_source_files(spark, sf_dir)
     )
-    cum = merged.select(
-        "bin",
-        F.sum("n").over(
-            Window.orderBy("bin").rowsBetween(
-                Window.unboundedPreceding, Window.currentRow
-            )
-        ).alias("cum"),
+    merged = _run_to_memory(cents_histogram(ev), output_mode="complete")
+    values = value_cents(load_table(spark, sf_dir, "events"))
+    quantiles = histogram_quantiles(merged, values, QH_EV_BIN_CENTS)
+    return quantiles.withColumnsRenamed(
+        {"est_hi": "est_hi_cents", "exact_val": "exact_cents"}
     )
-    total = merged.agg(F.sum("n").alias("total"))
-    pcts = spark.range(1).select(
-        F.explode(F.array(*[F.lit(p) for p in QH_EV_PCTS])).alias("pct")
-    )
-    thr = pcts.crossJoin(F.broadcast(total)).select(
-        "pct",
-        F.floor((F.col("total") * F.col("pct") + F.lit(99)) / F.lit(100))
-        .cast("long")
-        .alias("thr"),
-    )
-    est = (
-        thr.join(F.broadcast(cum), F.col("cum") >= F.col("thr"))
-        .groupBy("pct")
-        .agg(F.min("thr").alias("thr"), F.min("bin").alias("bin"))
-        .select(
-            "pct",
-            "thr",
-            ((F.col("bin") + 1) * QH_EV_BIN_CENTS).alias("est_hi_cents"),
-        )
-    )
-    vcum = (
-        load_table(spark, sf_dir, "events")
-        .select(
-            F.expr(
-                "CAST(floor(value * CAST(100.0 AS DOUBLE)"
-                " + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-            ).alias("cents")
-        )
-        .groupBy("cents")
-        .agg(F.count("*").alias("n"))
-        .select(
-            "cents",
-            F.sum("n").over(
-                Window.orderBy("cents").rowsBetween(
-                    Window.unboundedPreceding, Window.currentRow
-                )
-            ).alias("cum"),
-        )
-    )
-    return (
-        est.join(F.broadcast(vcum), F.col("cum") >= F.col("thr"))
-        .groupBy("pct")
-        .agg(
-            F.min("thr").alias("thr"),
-            F.min("est_hi_cents").alias("est_hi_cents"),
-            F.min("cents").alias("exact_cents"),
-        )
-        .select(
-            "pct",
-            "thr",
-            "est_hi_cents",
-            "exact_cents",
-            (
-                (F.col("est_hi_cents") - F.col("exact_cents") >= 0)
-                & (
-                    F.col("est_hi_cents") - F.col("exact_cents")
-                    <= QH_EV_BIN_CENTS
-                )
-            ).alias("bound_ok"),
-        )
-    )
-
-
-QUANTILE_HISTOGRAM_STREAMING_SQL = f"""
-WITH cents_t AS (
-  SELECT CAST(floor(value * CAST(100.0 AS DOUBLE)
-    + CAST(0.5 AS DOUBLE)) AS BIGINT) AS cents FROM events),
-merged AS (
-  SELECT cents // {QH_EV_BIN_CENTS} AS bin, count(*) AS n
-  FROM cents_t GROUP BY 1),
-cum AS (
-  SELECT bin, CAST(sum(n) OVER (ORDER BY bin
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-  FROM merged),
-total AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM merged),
-thr AS (
-  SELECT pct, CAST(floor((total * pct + 99) / 100) AS BIGINT) AS thr
-  FROM (SELECT unnest([{", ".join(str(p) for p in QH_EV_PCTS)}]) AS pct)
-  CROSS JOIN total),
-est AS (
-  SELECT pct, min(thr) AS thr,
-         (min(bin) + 1) * {QH_EV_BIN_CENTS} AS est_hi_cents
-  FROM thr JOIN cum ON cum >= thr GROUP BY pct),
-vcum AS (
-  SELECT cents, CAST(sum(n) OVER (ORDER BY cents
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-  FROM (SELECT cents, count(*) AS n FROM cents_t GROUP BY cents)),
-ex AS (
-  SELECT pct, min(thr) AS thr, min(est_hi_cents) AS est_hi_cents,
-         min(cents) AS exact_cents
-  FROM est JOIN vcum ON cum >= thr GROUP BY pct)
-SELECT pct, thr, est_hi_cents, CAST(exact_cents AS BIGINT) AS exact_cents,
-       est_hi_cents - exact_cents >= 0
-         AND est_hi_cents - exact_cents <= {QH_EV_BIN_CENTS} AS bound_ok
-FROM ex
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -1747,42 +1590,20 @@ FROM coded
 # Streaming per-source drift monitor (KL vs corpus)
 # ---------------------------------------------------------------------------
 
-def source_drift_stream_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running per-(source, md5-bucket) token counts over the arriving
-    document stream — the state the online drift monitor maintains.
-    State is BOUNDED at |sources| x FEAT_BUCKETS rows no matter how much
-    corpus flows through (the same bounded-sketch argument as the
-    streaming CMS/histogram twins); text never crosses the exchange —
-    each micro-batch ships partially-combined (source, bucket, count)."""
-    return drift_state_from_stream(stream_documents(spark, sf_dir))
-
-
-def drift_state_from_stream(docs: DataFrame) -> DataFrame:
-    """The drift-state aggregation over any documents stream (source-
-    agnostic: file landing zone here, Kafka/Kinesis in production)."""
-    from ..functions.portable import words_expr
-
-    wb = docs.select(
-        "source", F.explode(F.expr(words_expr("text", "spark"))).alias("w")
-    ).select("source", F.substring(F.md5("w"), 1, 2).alias("b"))
-    return wb.groupBy("source", "b").agg(F.count("*").alias("c_sb"))
-
-
 def q_source_drift_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded replay of the streaming drift-state build (complete mode
-    — the merged (source, bucket) counts are the snapshot), finished by
+    """Bounded replay of the streaming drift-state build
+    (``selection.drift_cells`` over the document stream, complete mode —
+    the merged (source, bucket) counts are the snapshot), finished by
     the SAME exact-integer KL report as the batch twin
-    (operators/selection.drift_report). End state over the bounded
-    stream equals the batch aggregate exactly (count addition is
-    associative), so the batch oracle applies verbatim; the monitor's
-    online form would read the same snapshot each trigger."""
-    from ..operators.selection import drift_report
-
+    (``selection.drift_report``). End state over the bounded stream
+    equals the batch aggregate exactly (count addition is associative),
+    so the batch oracle applies verbatim; the monitor's online form
+    would read the same snapshot each trigger."""
     # localCheckpoint: drift_report self-joins the relation (grid x
     # probe); the memory-sink view resolves both branches to the same
     # attribute ids, so cut lineage exactly as the batch twin does
     per_src = _run_to_memory(
-        source_drift_stream_df(spark, sf_dir), output_mode="complete"
+        drift_cells(stream_documents(spark, sf_dir)), output_mode="complete"
     ).localCheckpoint(eager=False)
     return drift_report(per_src)
 
@@ -1871,18 +1692,15 @@ ORACLES = {
 }
 
 
-def _heavy_hitters_streaming_oracle() -> str:
-    # The bounded stream's final sketch equals the batch sketch (cell
-    # addition is associative), so the batch CMS oracle applies verbatim.
-    from ..operators.sketches import _heavy_hitters_cms_sql
-
-    return _heavy_hitters_cms_sql()
-
-
-ORACLES["heavy_hitters_streaming"] = _heavy_hitters_streaming_oracle()
+# The bounded stream's final sketch equals the batch sketch (cell
+# addition is associative), so the batch CMS oracle applies verbatim.
+ORACLES["heavy_hitters_streaming"] = _heavy_hitters_cms_sql()
 # The bounded stream's final histogram equals the batch histogram (bin
 # addition is associative), so one epoch-independent SQL is the oracle.
-ORACLES["quantile_histogram_streaming"] = QUANTILE_HISTOGRAM_STREAMING_SQL
+ORACLES["quantile_histogram_streaming"] = f"""
+SELECT pct, thr, est_hi AS est_hi_cents, exact_val AS exact_cents, bound_ok
+FROM ({cents_histogram_quantiles_sql()})
+"""
 ORACLES["pq_ingest_streaming"] = _pq_ingest_streaming_sql()
 
 

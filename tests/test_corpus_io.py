@@ -1098,8 +1098,10 @@ def test_writers_take_partition_columns_from_the_manifest(spark):
     layout clustering read both columns from the manifest — assuming
     the default ('source',) made delete swap a flat source=*/ tree over
     the nested layout, after which every reader of the corpus failed —
-    and an upsert naming other columns than the manifest raises before
-    any write, leaving the corpus byte-unchanged."""
+    and an upsert or a build naming other columns than the manifest
+    raises before any write, leaving the corpus byte-unchanged (a build
+    under the default used to replace both source=*/ dirs wholesale and
+    bless only the rows it wrote, verify_manifest green)."""
     import hashlib
 
     docs = spark.range(200).select(
@@ -1142,11 +1144,14 @@ def test_writers_take_partition_columns_from_the_manifest(spark):
         delta = docs.filter("doc_id = 7").withColumn("text", F.lit("new"))
         with pytest.raises(ValueError, match="partitioned by"):
             corpus_io.upsert_corpus(delta, out)  # default ('source',)
+        with pytest.raises(ValueError, match="partitioned by"):
+            corpus_io.write_partitioned_corpus(docs.limit(10), out)
         assert snapshot(out) == before
         assert not [
             d for d in os.listdir(out)
             if d.startswith(("_staging_", "_trash_"))
         ]
+        assert corpus_io.read_corpus(spark, out).count() == 199
 
 
 def test_partition_values_with_hive_escaped_chars_roundtrip(spark):

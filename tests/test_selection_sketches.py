@@ -9,6 +9,7 @@ from conftest import SF_DIR, assert_matches_oracle
 from pyspark.sql import functions as F
 
 from flink_stream_processing_refarch_spark.operators import selection, sketches
+from flink_stream_processing_refarch_spark.plans import relational
 from flink_stream_processing_refarch_spark.schemas import load_table
 
 ALL = {**selection.QUERIES, **sketches.QUERIES}
@@ -178,3 +179,92 @@ def test_streaming_drift_equals_batch(spark):
         tuple(r) for r in jobs.q_source_drift_streaming(spark, SF_DIR).collect()
     }
     assert stream == batch
+
+
+def _session_twin(spark):
+    from flink_stream_processing_refarch_spark.sources.trips import load_events
+
+    ev_ts = load_events(spark, SF_DIR).withColumn(
+        "ts_t", F.timestamp_micros(F.expr("ts DIV 1000"))
+    )
+    return relational.session_windows(ev_ts)
+
+
+def _cms_twin(spark):
+    ev = load_table(spark, SF_DIR, "events")
+    return sketches.cms_topk_report(sketches.cms_cells(ev), ev)
+
+
+def _drift_twin(spark):
+    from flink_stream_processing_refarch_spark.schemas import spread
+
+    docs = spread(
+        load_table(spark, SF_DIR, "documents").select("source", "text"),
+        src_path=f"{SF_DIR}/documents.parquet",
+    )
+    return selection.drift_report(selection.drift_cells(docs))
+
+
+def _quantile_twin(spark):
+    docs = load_table(spark, SF_DIR, "documents")
+    merged = (
+        docs.groupBy(
+            "source", F.floor(F.col("n_chars") / sketches.QH_BIN_W).alias("bin")
+        )
+        .agg(F.count("*").alias("n"))
+        .groupBy("bin")
+        .agg(F.sum("n").alias("n"))
+    )
+    return sketches.histogram_quantiles(
+        merged, docs.select("n_chars"), sketches.QH_BIN_W
+    )
+
+
+# batch entry -> the shared functions composed over the static source the
+# way its streaming twin composes them over the stream
+_TWINS = {
+    "session_windows": (relational.q_session_windows, _session_twin),
+    "heavy_hitters_cms": (sketches.q_heavy_hitters_cms, _cms_twin),
+    "source_drift": (selection.q_source_drift, _drift_twin),
+    "quantile_histogram": (sketches.q_quantile_histogram, _quantile_twin),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_TWINS))
+def test_batch_and_stream_twins_share_one_state_definition(
+    spark, monkeypatch, name
+):
+    """Each streaming twin binds the same state function as its batch
+    entry: composed over the static source, the shared functions give
+    the batch entry's optimized plan exactly (attribute ids stripped).
+    The drift entry's localCheckpoint is made the identity so its
+    checkpointed state is compared too, not an opaque RDD scan."""
+    import re
+
+    def plan(df):
+        text = df._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"#\d+L?", "", text)
+
+    monkeypatch.setattr(
+        type(spark.range(1)), "localCheckpoint", lambda df, eager=True: df
+    )
+    batch, twin = _TWINS[name]
+    assert plan(twin(spark)) == plan(batch(spark, SF_DIR))
+
+
+def test_histogram_quantiles_over_static_events_equals_streaming_entry(spark):
+    """The quantile tail over the static events cents histogram returns
+    exactly the rows of the streaming entry, which reads the same
+    histogram merged across micro-batches."""
+    from flink_stream_processing_refarch_spark.streaming import jobs
+
+    ev = load_table(spark, SF_DIR, "events")
+    static = sketches.histogram_quantiles(
+        sketches.cents_histogram(ev),
+        sketches.value_cents(ev),
+        sketches.QH_EV_BIN_CENTS,
+    )
+    stream = jobs.q_quantile_histogram_streaming(spark, SF_DIR)
+    assert sorted(map(tuple, static.collect())) == sorted(
+        map(tuple, stream.collect())
+    )

@@ -187,18 +187,34 @@ def test_no_duplicate_top_level_definitions():
     assert dups == []
 
 
-def test_tools_reference_only_live_corpus_io_names():
-    """Every ``corpus_io.<attr>`` a tool script uses, and every name it
-    imports from the corpus_io module, must exist: a helper or option
-    removed from corpus_io must not leave a script behind that only
-    fails when someone runs it. AST scan; no script is executed."""
+def test_tools_reference_only_live_package_names():
+    """Every attribute a tool script reads off a package module it binds
+    by name (jobs, sketches, selection, relational, sinks, corpus_io),
+    and every name it imports from one of those modules, must exist: a
+    helper or option removed or moved in the package must not leave a
+    script behind that only fails when someone runs it. AST scan; no
+    script is executed."""
     import ast
     import glob
+    import importlib
     import os
 
-    from flink_stream_processing_refarch_spark.operators import corpus_io
-
-    module = "flink_stream_processing_refarch_spark.operators.corpus_io"
+    modules = {
+        m.__name__: m
+        for m in (
+            importlib.import_module(
+                f"flink_stream_processing_refarch_spark.{sub}"
+            )
+            for sub in (
+                "streaming.jobs",
+                "operators.sketches",
+                "operators.selection",
+                "plans.relational",
+                "streaming.sinks",
+                "operators.corpus_io",
+            )
+        )
+    }
     tools = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
     )
@@ -206,20 +222,33 @@ def test_tools_reference_only_live_corpus_io_names():
     for path in sorted(glob.glob(os.path.join(tools, "*.py"))):
         with open(path) as f:
             tree = ast.parse(f.read(), path)
+        bound = {}  # local name -> module object, however it was imported
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.module:
+                for a in node.names:
+                    full = f"{node.module}.{a.name}"
+                    if full in modules:
+                        bound[a.asname or a.name] = modules[full]
+            elif isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.name in modules and a.asname:
+                        bound[a.asname] = modules[a.name]
         for node in ast.walk(tree):
             if (
                 isinstance(node, ast.Attribute)
                 and isinstance(node.value, ast.Name)
-                and node.value.id == "corpus_io"
+                and node.value.id in bound
             ):
-                names = [node.attr]
-            elif isinstance(node, ast.ImportFrom) and node.module == module:
-                names = [a.name for a in node.names]
+                module, names = bound[node.value.id], [node.attr]
+            elif isinstance(node, ast.ImportFrom) and node.module in modules:
+                module, names = modules[node.module], [
+                    a.name for a in node.names
+                ]
             else:
                 continue
             missing += [
                 f"{os.path.basename(path)}:{node.lineno}: {n}"
                 for n in names
-                if not hasattr(corpus_io, n)
+                if not hasattr(module, n)
             ]
     assert missing == []

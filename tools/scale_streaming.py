@@ -49,6 +49,11 @@ import pyarrow as pa  # noqa: E402
 import pyarrow.compute as pc  # noqa: E402
 import pyarrow.parquet as pq  # noqa: E402
 
+from flink_stream_processing_refarch_spark.operators import (  # noqa: E402
+    selection,
+    sketches,
+)
+from flink_stream_processing_refarch_spark.plans import relational  # noqa: E402
 from flink_stream_processing_refarch_spark.session import get_spark  # noqa: E402
 from flink_stream_processing_refarch_spark.streaming import jobs  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
@@ -189,13 +194,13 @@ def main() -> None:
 
         cases = {
             "heavy_hitters_streaming": (
-                jobs.heavy_hitters_from_events(mk()), "complete"),
+                sketches.cms_cells(mk()), "complete"),
             "quantile_histogram_streaming": (
-                jobs.quantile_hist_from_events(mk()), "complete"),
+                sketches.cents_histogram(mk()), "complete"),
             "streaming_dedup": (
                 jobs.streaming_dedup_from_events(with_ts(mk1())), "append"),
             "session_windows_streaming": (
-                jobs.session_windows_from_events(with_ts(mk1())), "append"),
+                relational.session_windows(with_ts(mk1())), "append"),
             "stream_stream_join": (
                 jobs.stream_stream_join_from_events(
                     with_ts(mk1()), with_ts(mk1())), "append"),
@@ -220,7 +225,7 @@ def main() -> None:
                 "complete",
             )
             cases["source_drift_streaming"] = (
-                jobs.drift_state_from_stream(
+                selection.drift_cells(
                     docs_stream(spark, docs_dir, n_doc_files)
                 ),
                 "complete",
