@@ -2828,7 +2828,7 @@ def q_corpus_upsert_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     must wait it out, not die on MaintenanceLeaseHeld."""
     import tempfile
 
-    from ..schemas import load_table, scratch_dir
+    from ..schemas import TMPFS_BASE, load_table, scratch_dir
     from ..streaming.jobs import stream_documents
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -2837,10 +2837,9 @@ def q_corpus_upsert_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = scratch_dir("corpus_rts_")
     write_partitioned_corpus(docs, out)
     sdocs = stream_documents(spark, sf_dir).select("doc_id", "text", "source")
-    ck = tempfile.mkdtemp(
-        prefix="upsck_", dir="/dev/shm" if os.path.isdir("/dev/shm") else None
-    )
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="upsck_", dir=TMPFS_BASE, ignore_cleanup_errors=True
+    ) as ck:
         q = (
             _delta_from_docs(sdocs)
             .writeStream.foreachBatch(
@@ -2851,8 +2850,6 @@ def q_corpus_upsert_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        shutil.rmtree(ck, ignore_errors=True)
     return spark.read.parquet(out).select(
         "doc_id", "source", F.md5("text").alias("h")
     )

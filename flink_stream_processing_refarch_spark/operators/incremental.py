@@ -293,7 +293,7 @@ def refresh_corpus_index(
     the same columns — then the refresh's WRITE is also O(changed):
     dynamic-overwrite the changed partitions' index files, drop the
     removed partitions' dirs, leave everything else untouched
-    (`tools/scale_cdc_refresh.py` prices exactly that at the x1000
+    (SCALING_DECADE2.md prices exactly that at the x1000
     decade: refresh 0.53x of the rebuild with 1/20 partitions
     changed, both scan and write pruned). The lazy frame this
     function returns is the read-side form; its `ch["df"]` slice is
@@ -462,7 +462,7 @@ def q_cdc_index_refresh_streaming(spark: SparkSession, sf_dir: str) -> DataFrame
 
     # the standing index TABLE as of T0 (ingest-time materialization,
     # same partitioning as the corpus — the production shape priced
-    # in tools/scale_cdc_refresh.py)
+    # in SCALING_DECADE2.md)
     hash_index(read_corpus(spark, out)).write.mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy("source").parquet(idx)

@@ -223,8 +223,12 @@ def q_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumers (src totals, corpus bucket counts, grand total, grid
     # join) don't each re-run the tokenize+md5 scan — measured 4
     # FileScans -> 1 (the same working-set pattern as semantic_dedup's
-    # quantized vectors).
-    return drift_report(drift_cells(base).localCheckpoint(eager=False))
+    # quantized vectors). EAGER: a lazy checkpoint is computed by the
+    # report's concurrent AQE stage jobs, the first to finish cuts the
+    # lineage, the driver GCs the aggregate's SQL metrics, and the
+    # others' tasks then report to accumulators that no longer exist
+    # (an ERROR burst per task, `non-existent accumulator`).
+    return drift_report(drift_cells(base).localCheckpoint(eager=True))
 
 
 def drift_cells(docs: DataFrame) -> DataFrame:

@@ -405,8 +405,8 @@ LIMIT {TOP_K}
 
 PQ_SUBS = 8       # subspaces (DIM / PQ_SUB_DIM)
 PQ_SUB_DIM = 8    # dims per subspace
-# r05 retune, driven by the measured recall curve (tools/ann_recall.py,
-# 20k-vector corpus /dev/shm/graft_sf1): PQ_K 16 -> 256 (8-bit codes,
+# r05 retune, driven by the measured recall curve (README.md's recall
+# table; 20k-vector scale corpus): PQ_K 16 -> 256 (8-bit codes,
 # the standard PQ codebook size) and PQ_CAND 50 -> 1000 (5% of that
 # corpus re-ranked exactly) lift recall@10 from 0.11 to 0.93. The grid:
 #   PQ_K=16:  cand 50/200/1000 -> 0.15 / 0.30 / 0.59
@@ -498,7 +498,7 @@ def _pq_codes_udf(books_int: list[list[list[int]]]):
     sweep oscillation — a fresh worker's first big allocation pays a
     bursty first-touch fault storm against the VM's memory backend
     (host steal + guest system time, not user CPU; evidence in
-    README r14 / tools/probe_pq_ingest.py). The expanded form's
+    README r14). The expanded form's
     intermediates are n x S x K — D(=8)x smaller — and warm encode is
     ~10x faster."""
     import numpy as np
@@ -571,7 +571,7 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance from each query subvector to the coded centroid), takes
     the PQ_CAND best, and re-ranks just those exactly by cosine.
     Measured recall@10 = 0.93 at the default knobs on the 20k-vector
-    scale corpus (tools/ann_recall.py; grid at the constants above).
+    scale corpus (README.md's recall table; grid at the constants above).
 
     Scale shape: codes ARE computed once at ingest — the stamp-keyed
     ``(vec_id, codes)`` sidecar (:func:`pq_codes_path`) — so the ADC
@@ -816,8 +816,8 @@ def q_knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     lexicographically first label), and per TRUE label we report query
     count, correct count, and exact accuracy in ppm. This is the
     standard harness for judging an embedding space / ANN index
-    (recall tooling measures the INDEX against exact kNN —
-    tools/ann_recall.py; this measures the SPACE against labels).
+    (ann_recall_eval measures the INDEX against exact kNN; this
+    measures the SPACE against labels).
 
     Determinism + scale: vectors quantized to exact-integer millionths
     (semantic._quant_expr — L2-normalized, so the BIGINT dot product
@@ -952,8 +952,7 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     many of the exact top-REC_K nearest neighbours the single-probe
     LSH bucket path returns — recall@K of the INDEX against exact kNN
     (knn_label_accuracy judges the SPACE against labels; this judges
-    the index against the space; tools/ann_recall.py is the offline
-    sweep version of the same measurement). Output per query:
+    the index against the space). Output per query:
     candidate-bucket size, the two top-k overlaps, exact-ppm recall.
 
     Determinism + scale: one corpus scan derives quantized vectors

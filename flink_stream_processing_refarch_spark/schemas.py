@@ -9,6 +9,8 @@ needs no POJO codegen — one wide StructType covers both event types
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import types as T
 
 # Union of TripEvent (events/kinesis/TripEvent.java:22-28, producer-side
@@ -125,8 +127,6 @@ def table_stamp(path: str) -> tuple[int, int]:
     change detector). Any in-place regeneration of the testdata — the
     documented round-over-round layout drift — changes this token, so
     every cache keyed on it self-invalidates."""
-    import os
-
     try:
         st = os.stat(path)
         if not os.path.isdir(path):
@@ -153,7 +153,6 @@ def table_row_count(path: str) -> int | None:
     single-file layout and a directory of part files; returns None when
     the metadata cannot be read (caller falls back to ``df.count()``)."""
     import glob as _glob
-    import os
 
     import pyarrow.parquet as pq
 
@@ -221,7 +220,6 @@ def _scan_splits_estimate(spark, src_path: str) -> int:
     full extra physical-planning pass per call (measured ~0.3 s driver
     time at local[32])."""
     import math
-    import os
 
     max_pb = _byte_conf(
         spark, "spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024
@@ -247,18 +245,13 @@ def _scan_splits_estimate(spark, src_path: str) -> int:
 #: layout to the DATA, not to defaultParallelism: at sf0.1 (~2 MB) this
 #: yields ~8 files, enough parallel splits for the CPU-bound headline map
 #: work while trivial scans stop paying a 32-task scheduling floor per
-#: stage (the r04 regression cluster: time_rollup & co. 2-3x). Override
-#: via SPARK_GRAFT_NORM_EVENTS_FILES for tuning experiments.
+#: stage (the r04 regression cluster: time_rollup & co. 2-3x).
 NORM_EVENTS_BYTES_PER_FILE = 256 * 1024
 
 
 def _norm_events_file_count(src_bytes: int, par: int) -> int:
     import math
-    import os
 
-    env = os.environ.get("SPARK_GRAFT_NORM_EVENTS_FILES", "")
-    if env.strip():
-        return max(1, int(env))
     if src_bytes < 0:
         return par
     return max(2, min(par, math.ceil(src_bytes / NORM_EVENTS_BYTES_PER_FILE)))
@@ -266,6 +259,10 @@ def _norm_events_file_count(src_bytes: int, par: int) -> int:
 
 #: (sf_dir, events stamp, parallelism, nfiles) -> materialized dir
 _NORM_EVENTS_CACHE: dict = {}
+
+#: where throwaway directories go: RAM-backed tmpfs when the host has
+#: one, else the platform temp dir (``tempfile``'s ``dir=None``)
+TMPFS_BASE = "/dev/shm" if os.path.isdir("/dev/shm") else None
 
 #: every scratch dir created via scratch_dir(), for one atexit cleanup
 _SCRATCH_DIRS: list = []
@@ -285,11 +282,9 @@ def scratch_dir(prefix: str) -> str:
     events, PQ codes sidecar, corpus-roundtrip corpora, embedding split
     replicas) — cleanup semantics live here, not in per-site copies."""
     import atexit
-    import os
     import tempfile
 
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    out = tempfile.mkdtemp(prefix=prefix, dir=base)
+    out = tempfile.mkdtemp(prefix=prefix, dir=TMPFS_BASE)
     if not _SCRATCH_DIRS:
         atexit.register(_cleanup_scratch_dirs)
     _SCRATCH_DIRS.append(out)
@@ -341,11 +336,6 @@ def evict_stale_stamp(
 #: tag -> (live persisted DataFrame, semantic hash) for that builder site
 _LIVE_PERSISTS: dict = {}
 
-#: lifecycle counters for the persist audit (tools/persist_audit.py):
-#: register = new generation persisted, reuse = identical-plan live hit,
-#: supersede = previous generation unpersisted (the eviction).
-PERSIST_STATS = {"register": 0, "reuse": 0, "supersede": 0}
-
 
 def _leaf_file_stamps(df) -> tuple:
     """(path, mtime_ns) of every file-relation leaf in the ANALYZED
@@ -353,8 +343,6 @@ def _leaf_file_stamps(df) -> tuple:
     which runs after cache substitution) and raising on any non-local
     / unrecognized leaf so the caller falls back to never-stale
     supersede semantics."""
-    import os as _os
-
     leaves = df._jdf.queryExecution().analyzed().collectLeaves()
     out = []
     for i in range(leaves.size()):
@@ -367,7 +355,7 @@ def _leaf_file_stamps(df) -> tuple:
         for f in node.relation().location().inputFiles():
             if not f.startswith("file:"):
                 raise ValueError(f"non-local file {f}")
-            out.append((f, _os.stat(f.removeprefix("file:")).st_mtime_ns))
+            out.append((f, os.stat(f.removeprefix("file:")).st_mtime_ns))
     return tuple(sorted(out))
 
 
@@ -437,15 +425,12 @@ def persist_latest(df, tag: str):
             lvl = odf.storageLevel
             if not (lvl.useMemory or lvl.useDisk):
                 odf.persist()
-            PERSIST_STATS["reuse"] += 1
             return odf
         try:
             odf.unpersist(False)
         except Exception:  # pragma: no cover - dead session handles
             pass
-        PERSIST_STATS["supersede"] += 1
     _LIVE_PERSISTS[tag] = (df.persist(), h)
-    PERSIST_STATS["register"] += 1
     return df
 
 
@@ -468,8 +453,8 @@ def normalized_events_path(spark, sf_dir: str) -> str | None:
     events scan pay a 32-task scheduling floor per stage (time_rollup &
     co. regressed 2-3x) and even slowed the CPU-heavy headline; the
     8-file layout at sf0.1 was the measured optimum for BOTH (headline
-    1.44 -> 1.13 s, cheap scans back to their pre-materialization walls
-    — tools/tune_norm_files.py is the harness).
+    1.44 -> 1.13 s, cheap scans back to their pre-materialization walls;
+    the measured grid is in README.md).
 
     GATED like :func:`spread`: only the starved-scan local case (source
     splits < cores — the single-row-group testdata files, which Spark
@@ -486,8 +471,6 @@ def normalized_events_path(spark, sf_dir: str) -> str | None:
     is content-neutral for every consumer (aggregations / joins /
     windowed streams over the whole bounded set).
     """
-    import os
-
     src = f"{sf_dir}/events.parquet"
     par = spark.sparkContext.defaultParallelism
     if _scan_splits_estimate(spark, src) >= par:

@@ -64,6 +64,7 @@ from ..operators.sketches import (
 from ..operators.sketches import QH_PCTS as QH_EV_PCTS  # noqa: F401
 from ..plans import taxi
 from ..plans.relational import SESSION_GAP_MIN, session_windows
+from ..schemas import TMPFS_BASE
 from ..sources.trips import clean_trip_filter_sql, trip_exprs
 
 # Normalized events schema: what stream_events/load_table emit after the
@@ -296,18 +297,14 @@ def pump_wire_to_kinesis(
     StreamPopulator.java:62-66) into the stream at ``endpoint`` —
     a ``file://`` endpoint drives the local wire fake. Bounded
     (availableNow); blocks until the pump drains."""
-    import shutil
-    import tempfile as _tf
-
     from ..sources.kinesis import kinesis_writer
 
     reader = spark.readStream
     for k, v in source_opts.items():
         reader = reader.option(k, v)
-    ck = _tf.mkdtemp(
-        prefix="kck_", dir="/dev/shm" if os.path.isdir("/dev/shm") else None
-    )
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="kck_", dir=TMPFS_BASE, ignore_cleanup_errors=True
+    ) as ck:
         q = (
             kinesis_writer(
                 reader.text(json_dir),
@@ -320,13 +317,9 @@ def pump_wire_to_kinesis(
             .start()
         )
         q.awaitTermination()
-    finally:
-        shutil.rmtree(ck, ignore_errors=True)
 
 
-def q1_kinesis_wire(
-    spark: SparkSession, sf_dir: str, audit: str = "inline"
-) -> DataFrame:
+def q1_kinesis_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q1 end-to-end through BOTH Kinesis swap points (S1 + S7) over the
     local wire fake: replay the dataset to wire JSON (the producer's
     serialization, StreamPopulator.java) -> ``kinesis_writer`` pumps it
@@ -340,60 +333,37 @@ def q1_kinesis_wire(
     directory; swapping a real endpoint re-enables the connector
     (``sources/kinesis.py``).
 
-    ``audit`` (r12, VERDICT r11 #5 — the schedule discipline is now a
-    parameter, not prose): ``"inline"`` (default) runs the
-    ``verify_wire_stream`` fsck once before consuming — a second full
-    scan of the committed stream (~+1.5 s at sf0.1), kept as the
-    driver-entry default so the at-rest integrity path is exercised
-    end-to-end every round; ``"off"`` skips it — the production
-    choice, where the audit runs as SCHEDULED MAINTENANCE (call
-    ``verify_wire_stream`` on its own cadence; it is one distributed
-    job per run, independent of epoch count) instead of doubling every
-    consume's scan. A production call-site now has to pick explicitly
-    rather than inherit the doubled scan silently."""
-    import shutil
-    import tempfile as _tf
-
+    Before consuming, the ``verify_wire_stream`` at-rest audit re-checks
+    every committed epoch (a second full scan of the stream, ~+1.5 s at
+    sf0.1), so the integrity path runs end-to-end on every check."""
     from ..sources.kinesis import kinesis_reader, parse_wire_bytes
+    from ..sources.kinesis_fake import verify_wire_stream
+    from . import replay as _replay
 
-    if audit not in ("inline", "off"):
-        raise ValueError(
-            f"q1_kinesis_wire: audit must be 'inline' or 'off', "
-            f"got {audit!r}"
-        )
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _tf.mkdtemp(
-        prefix="kwire_", dir="/dev/shm" if os.path.isdir("/dev/shm") else None
-    )
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="kwire_", dir=TMPFS_BASE, ignore_cleanup_errors=True
+    ) as base:
         wire_dir = os.path.join(base, "wire")
-        from . import replay as _replay
-
         _replay.replay(spark, sf_dir, wire_dir, adapt="ORIGINAL")
         endpoint = f"file://{os.path.join(base, 'streams')}"
         pump_wire_to_kinesis(spark, wire_dir, endpoint)
-        if audit == "inline":
-            # at-rest integrity audit before consuming (r11): every
-            # committed epoch's content fingerprints re-verified against
-            # its manifest in one distributed job — a corrupted transport
-            # fails this driver row loudly instead of hashing wrong
-            # results
-            from ..sources.kinesis_fake import verify_wire_stream
-
-            rep = verify_wire_stream(
-                spark, os.path.join(base, "streams"), "taxi-trips"
+        # every committed epoch's content fingerprints re-verified
+        # against its manifest in one distributed job — a corrupted
+        # transport fails this driver row loudly instead of hashing
+        # wrong results
+        rep = verify_wire_stream(
+            spark, os.path.join(base, "streams"), "taxi-trips"
+        )
+        if rep["unverifiable"]:
+            raise RuntimeError(
+                f"wire audit: unverifiable epochs {rep['unverifiable']}"
             )
-            if rep["unverifiable"]:
-                raise RuntimeError(
-                    f"wire audit: unverifiable epochs {rep['unverifiable']}"
-                )
         records = kinesis_reader(
             spark, "taxi-trips", "local", endpoint=endpoint
         ).load()
         trips = wire_trips(parse_wire_bytes(records))
         return _run_to_memory(q1_agg_from_trips(trips))
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def clean_trips_from_event_stream(ev: DataFrame) -> DataFrame:
@@ -464,29 +434,26 @@ def _run_to_memory(
     # Bounded throwaway replay -> checkpoint on tmpfs when available (the
     # offset/commit/state logs fsync per micro-batch; ~1s/query on ext4).
     # Durable jobs (run_taxi_pipeline, the CLI) pass their own
-    # checkpointLocation on real storage.
-    ck_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    ckpt = tempfile.mkdtemp(prefix="ckpt_", dir=ck_base)
+    # checkpointLocation on real storage. The result lives in the memory
+    # sink, so the checkpoint goes when the replay ends (it would
+    # otherwise accumulate in /dev/shm: hundreds across a test session).
     try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        global LAST_RUN_PROGRESS
-        LAST_RUN_PROGRESS = list(q.recentProgress)
+        with tempfile.TemporaryDirectory(
+            prefix="ckpt_", dir=TMPFS_BASE, ignore_cleanup_errors=True
+        ) as ckpt:
+            q = (
+                df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            global LAST_RUN_PROGRESS
+            LAST_RUN_PROGRESS = list(q.recentProgress)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        # the bounded replay is done and the result lives in the memory
-        # sink — the throwaway checkpoint would otherwise accumulate in
-        # /dev/shm (hundreds observed across a test session)
-        import shutil
-
-        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
 
@@ -1410,12 +1377,11 @@ def q_taxi_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (:func:`half_source_files`) makes every check, at any SF, run >= 2
     micro-batches whose windows merge in the state store. The sink and
     checkpoint are throwaway: the docs are materialized, then both go."""
-    import shutil
-
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    out_dir = tempfile.mkdtemp(prefix="es_sink_", dir=base)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_pipeline_", dir=base)
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="es_sink_", dir=TMPFS_BASE, ignore_cleanup_errors=True
+    ) as out_dir, tempfile.TemporaryDirectory(
+        prefix="ckpt_pipeline_", dir=TMPFS_BASE, ignore_cleanup_errors=True
+    ) as ckpt:
         res = run_taxi_pipeline(
             spark,
             sf_dir,
@@ -1424,9 +1390,6 @@ def q_taxi_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             max_files_per_trigger=half_source_files(spark, sf_dir),
         )
         return res["pickup_count"].localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1525,11 +1488,10 @@ def q_pq_ingest_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = spark.read.parquet(split).schema
     pq_udf = _pq_codes_udf(books_int)
     # This entry oscillated 1.5s <-> 9s across sweeps on an untouched
-    # plan (VERDICT r11-r13). Root cause (README r14, instrumented in
-    # tools/probe_pq_ingest.py): the variance was entirely the first
-    # micro-batch's addBatch on freshly-forked Python workers, and
-    # inside it the first BIG numpy allocation — the old encoder's
-    # n x S x K x D broadcast intermediate (~132 KB/row) first-touch
+    # plan (VERDICT r11-r13). Root cause (README r14): the variance was
+    # entirely the first micro-batch's addBatch on freshly-forked Python
+    # workers, and inside it the first BIG numpy allocation — the old
+    # encoder's n x S x K x D broadcast intermediate (~132 KB/row) first-touch
     # faulting against the bench VM's lazy memory backend (host steal
     # + guest system time, ~0 user CPU). Fixed at the source: the
     # encoder now uses the expanded exact-int64 distance form with
@@ -1547,10 +1509,9 @@ def q_pq_ingest_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..schemas import scratch_dir
 
     out = scratch_dir("pq_sidecar_stream_")
-    ckpt = scratch_dir("ckpt_pq_ingest_")
-    import shutil
-
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="ckpt_pq_ingest_", dir=TMPFS_BASE, ignore_cleanup_errors=True
+    ) as ckpt:
         q = (
             coded.writeStream.format("parquet")
             .option("path", out)
@@ -1560,8 +1521,6 @@ def q_pq_ingest_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.read.parquet(out).select(
         "vec_id",
         F.array_join(
@@ -1602,9 +1561,10 @@ def q_source_drift_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint: drift_report self-joins the relation (grid x
     # probe); the memory-sink view resolves both branches to the same
     # attribute ids, so cut lineage exactly as the batch twin does
+    # (eagerly, for the same reason: see selection.q_source_drift)
     per_src = _run_to_memory(
         drift_cells(stream_documents(spark, sf_dir)), output_mode="complete"
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
     return drift_report(per_src)
 
 

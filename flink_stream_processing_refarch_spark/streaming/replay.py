@@ -255,8 +255,7 @@ def replay(
                 # rename — without this, chunks replay out of event-time
                 # order and a 0-second-watermark consumer silently drops
                 # whole earlier chunks as late (review finding r07,
-                # reproduced: 105 of 301 result rows). Same discipline
-                # as tools/scale_streaming.build_events; anchored to
+                # reproduced: 105 of 301 result rows). Anchored to
                 # recent wall-clock (see anchor_ns above).
                 t = anchor_ns + idx * 1_000_000_000
                 os.utime(dest, ns=(t, t))

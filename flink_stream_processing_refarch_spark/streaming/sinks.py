@@ -82,7 +82,7 @@ def write_batch_to_es(
     batch_df: DataFrame,
     sink: EsBulkFileSink,
     doc_type: str,
-    epoch_id: int | None = None,
+    epoch_id: int,
 ) -> None:
     """foreachBatch body for one result stream — EXECUTOR-SIDE writes.
 
@@ -94,23 +94,11 @@ def write_batch_to_es(
     redelivery — exactly-once to the transport, no driver materialization
     of result rows anywhere on this path.
     """
-    if epoch_id is not None:
-        target = epoch_dir(sink.out_dir, epoch_id)
-    else:
-        # ad-hoc (non-epoch) batches get a unique dir that the
-        # ``bulk-e*`` reader glob matches: a fixed 'bulk-adhoc' name was
-        # invisible to iter_bulk_lines AND overwrote the previous
-        # ad-hoc batch (review finding r07)
-        import uuid as _uuid
-
-        target = os.path.join(
-            sink.out_dir, f"bulk-e-adhoc-{_uuid.uuid4().hex[:12]}"
-        )
     (
         bulk_payload(batch_df, doc_type, sink.index)
         .write.mode("overwrite")
         .option("maxRecordsPerFile", sink.max_docs)
-        .text(target)
+        .text(epoch_dir(sink.out_dir, epoch_id))
     )
 
 

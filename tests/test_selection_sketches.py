@@ -181,6 +181,54 @@ def test_streaming_drift_equals_batch(spark):
     assert stream == batch
 
 
+def test_drift_entries_lose_no_task_accumulators(spark):
+    """Both drift entries checkpoint their state before the report's
+    jobs run. A lazy checkpoint was computed by the report's concurrent
+    stage jobs; the first to finish cut the lineage, the driver could GC
+    the state aggregate's SQL metrics, and the other jobs' tasks then
+    logged one ``non-existent accumulator`` ERROR per metric. Driver GCs
+    are forced throughout so that window is open; the driver log must
+    carry no such ERROR."""
+    import threading
+    import time
+
+    from flink_stream_processing_refarch_spark.streaming import jobs
+
+    jvm = spark._jvm
+    core = jvm.org.apache.logging.log4j.core
+    config = jvm.org.apache.logging.log4j.LogManager.getContext(
+        False
+    ).getConfiguration()
+    log = jvm.java.io.StringWriter()
+    appender = core.appender.WriterAppender.createAppender(
+        core.layout.PatternLayout.createDefaultLayout(),
+        None, log, "drift-accumulators", False, True,
+    )
+    appender.start()
+    root = config.getRootLogger()
+    root.addAppender(appender, None, None)
+    done = threading.Event()
+
+    def force_gc():
+        while not done.is_set():
+            jvm.System.gc()
+            time.sleep(0.1)
+
+    gc = threading.Thread(target=force_gc, daemon=True)
+    gc.start()
+    try:
+        for _ in range(2):
+            selection.q_source_drift(spark, SF_DIR).collect()
+            jobs.q_source_drift_streaming(spark, SF_DIR).collect()
+    finally:
+        done.set()
+        gc.join(timeout=60)
+        root.removeAppender("drift-accumulators")
+        appender.stop()
+    assert not gc.is_alive()
+    assert "non-existent accumulator" not in log.toString()
+
+
 def _session_twin(spark):
     from flink_stream_processing_refarch_spark.sources.trips import load_events
 

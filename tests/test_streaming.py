@@ -1079,24 +1079,6 @@ def test_quality_funnel_streaming_equals_batch(spark):
     assert len(stream) > 0
 
 
-def test_es_adhoc_batches_visible_and_append(spark, tmp_path):
-    """Ad-hoc (epoch-less) write_batch_to_es batches must be visible to
-    the bulk readers and must APPEND across calls, not clobber (review
-    finding r07: the fixed 'bulk-adhoc' dir matched no reader glob and
-    overwrote the previous batch)."""
-    from flink_stream_processing_refarch_spark.streaming.sinks import (
-        EsBulkFileSink,
-        iter_bulk_lines,
-        write_batch_to_es,
-    )
-
-    sink = EsBulkFileSink(str(tmp_path / "sink"))
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    write_batch_to_es(df, sink, "t")
-    write_batch_to_es(df.limit(1), sink, "t")
-    assert sum(1 for _ in iter_bulk_lines(str(tmp_path / "sink"))) // 2 == 3
-
-
 def test_replay_chunk_mtimes_monotone_and_multibatch_correct(spark, tmp_path):
     """Review finding r07 (confirmed: 105 of 301 result rows): the
     single-pass staging preserved arbitrary task-commit mtimes through

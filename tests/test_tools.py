@@ -252,3 +252,45 @@ def test_tools_reference_only_live_package_names():
                 if not hasattr(module, n)
             ]
     assert missing == []
+
+
+def test_docs_and_code_name_only_existing_tools():
+    """Every ``tools/<name>`` script named in the package, the tests, the
+    driver entry, README.md, SCALING*.md, PLANS.md or the verify skill
+    must exist, unless that same line says the script was removed: a
+    deleted probe must not leave a pointer that sends a reader to a file
+    that is gone."""
+    import glob
+    import os
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = (
+        glob.glob(
+            os.path.join(root, "flink_stream_processing_refarch_spark", "**", "*.py"),
+            recursive=True,
+        )
+        + glob.glob(os.path.join(root, "tests", "*.py"))
+        + glob.glob(os.path.join(root, "SCALING*.md"))
+        + [
+            os.path.join(root, p)
+            for p in (
+                "__spark_entry__.py",
+                "README.md",
+                "PLANS.md",
+                ".claude/skills/verify/SKILL.md",
+            )
+        ]
+    )
+    dangling = []
+    for path in sorted(paths):
+        with open(path) as f:
+            for n, line in enumerate(f, 1):
+                if "removed" in line:
+                    continue
+                dangling += [
+                    f"{os.path.relpath(path, root)}:{n}: tools/{name}.py"
+                    for name in re.findall(r"\btools/(\w+)", line)
+                    if not os.path.exists(os.path.join(root, "tools", f"{name}.py"))
+                ]
+    assert dangling == []

@@ -119,7 +119,7 @@ def main() -> None:
         # strictly increasing mtimes: the streaming harness replays these
         # files as micro-batches; file-source order then matches the
         # doc_id-derived ingest time, so the watermark advances
-        # monotonically (same trick as scale_streaming.build_events)
+        # monotonically
         os.utime(dst_part, ns=(k * 10**9, k * 10**9))
 
     vec_id = embs.column("vec_id").to_numpy()

@@ -190,7 +190,8 @@ def main() -> None:
         "",
         "A second decade (sf1 -> sf10, 500k docs) for the text family is",
         "measured separately in SCALING_DECADE2.md",
-        "(tools/scale_decade2.py) — the fully data-dominated step where",
+        "(tools/scale_decade2.py, since removed; git history keeps it) —",
+        "the fully data-dominated step where",
         "wall factors certify linearity directly.",
         "",
         "semantic_dedup's flat shuffle curve: its only exchanges are the",
